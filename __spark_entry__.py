@@ -1682,14 +1682,15 @@ def q_text_index_fuzzy_lsm(spark, sf):
     index on doc_id>=10, stack an O(batch) segment inserting docs 0-9 —
     segments now pending, so `query_fuzzy_index`'s expansion must recount
     df exactly from LIVE postings with the length-band pushed into every
-    segment scan (`live_term_slice`) instead of reading the stale rollup.
+    segment scan (`profile_segments.live_field_term_slice`) instead of
+    reading the stale rollup.
     The mutations net to the full corpus, so the oracle is the same fuzzy
     replay as `search_fuzzy` — any liveness/df drift hash-mismatches."""
     from azuredatalakeindexer_spark.sources.text_index import (
         build_text_index,
         query_fuzzy_index,
     )
-    from azuredatalakeindexer_spark.sources.text_segments import (
+    from azuredatalakeindexer_spark.sources.text_index import (
         upsert_text_index_segmented,
     )
 
@@ -2029,7 +2030,7 @@ def q_ann_delete_topk(spark, sf):
 
 
 def q_text_index_lsm_topk(spark, sf):
-    """Segmented (LSM) text-index lifecycle (sources/text_segments.py):
+    """Segmented (LSM) text-index lifecycle (sources/profile_segments.py):
     build on doc_id>=10, then THREE stacked O(batch) segments — upsert
     (insert 0-9, replace 10-14), delete 15-19, upsert re-adding doc 15
     with fresh text — and answer BM25 top-k through the last-writer-wins
@@ -2043,7 +2044,7 @@ def q_text_index_lsm_topk(spark, sf):
         build_text_index,
         query_text_index,
     )
-    from azuredatalakeindexer_spark.sources.text_segments import (
+    from azuredatalakeindexer_spark.sources.text_index import (
         delete_from_text_index_segmented,
         upsert_text_index_segmented,
     )
@@ -2110,7 +2111,7 @@ def q_stream_text_index(spark, sf):
 def q_stream_text_index_lsm(spark, sf):
     """Segmented streaming index maintenance: the same document-arrival
     drain as `stream_text_index`, but every post-build micro-batch is an
-    O(batch) LSM segment (`text_segments.upsert_text_index_segmented`)
+    O(batch) LSM segment (`text_index.upsert_text_index_segmented`)
     with `compact_every=2` folding mid-stream — the scale-correct shape
     for continuous text ingestion (in-place rewrites grow linearly with
     index size: BENCH_sf10_r07.json).  LWW per doc keeps it
@@ -2789,7 +2790,7 @@ def q_stream_highlight_lsm(spark, sf):
     segmented=True, store_text=True)`, compact_every=3 folding
     mid-stream), leaving live segments whose per-segment docstores the
     serve path must resolve by the max-segment rule
-    (`text_segments.live_docstore_slice`) — then `highlight_from_index`
+    (`highlight_profile_from_index`) — then `highlight_from_index`
     answers with candidate-sized fetches.  LWW per doc keeps the drain
     batch-split-invariant, so the oracle is the scan-time bm25 +
     first-hit snippet replay over the whole corpus."""

@@ -23,7 +23,11 @@ relations must never route through the driver.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -111,21 +115,24 @@ def read_meta_parquet(spark: SparkSession, target: str) -> "list[dict] | None":
     ``_check_n_buckets`` and every serve's stats/fieldstats read).
 
     Returns ``None`` when the relation cannot be read this way (missing
-    path, partitioned layout, or any decode surprise) — callers fall back
-    to the ordinary Spark read, so correctness never depends on this fast
-    path.  Use for metadata relations only: a data-sized relation through
-    the driver is the §5 anti-pattern this module's header warns about.
+    path, partitioned layout, or a filesystem / decode failure — logged
+    at debug level with the exception class) — callers fall back to the
+    ordinary Spark read, so correctness never depends on this fast path.
+    Anything else (a programming error) propagates.  Use for metadata
+    relations only: a data-sized relation through the driver is the §5
+    anti-pattern this module's header warns about.
     """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JError
+
+    from azuredatalakeindexer_spark.sources.staging import (
+        _hadoop_fs,
+        _jpath,
+        _read_file,
+    )
+
     try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from azuredatalakeindexer_spark.sources.staging import (
-            _hadoop_fs,
-            _jpath,
-            _read_file,
-        )
-
         fs, _ = _hadoop_fs(spark, target)
         dst = _jpath(spark, target)
         if not fs.exists(dst):
@@ -143,5 +150,11 @@ def read_meta_parquet(spark: SparkSession, target: str) -> "list[dict] | None":
         if not tables:
             return None
         return pa.concat_tables(tables, promote_options="default").to_pylist()
-    except Exception:
+    except (Py4JError, OSError, pa.ArrowException, ValueError) as exc:
+        _log.debug(
+            "read_meta_parquet(%s): falling back to a Spark read after %s: %s",
+            target,
+            type(exc).__name__,
+            exc,
+        )
         return None

@@ -114,10 +114,9 @@ def _victim_dbs(
     dl: DataFrame, n_db: int | None, id_col: str
 ) -> list[int] | None:
     """The delta's distinct id-hash dbuckets (a ≤ n_dbuckets model-sized
-    collect), or None when the index has no directory.  Split out of
-    ``_victim_source`` (r15) so maintenance ops can run this collect
-    CONCURRENTLY with the delta checkpoint instead of chaining two fixed
-    job latencies."""
+    collect), or None when the index has no directory.  Callers pass the
+    CHECKPOINTED delta: the dbuckets must describe the same id set the
+    rest of the op reads."""
     if n_db is None:
         return None
     return sorted(
@@ -350,21 +349,17 @@ def upsert_ivf_index(
     postings_path = f"{path}/postings"
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
-    # Layer 0 (r15 — the B/C prologue treatment VERDICT r14 next-#2 asked
-    # for): the delta checkpoint, the delta's dbucket list (recomputed
-    # from the batch-sized dedupe expression — cheaper than chaining a
-    # second fixed job latency behind the checkpoint), and the
-    # postings-layout probe are mutually independent; overlap them.
-    # n_dbuckets itself is a driver-side sidecar read (ms, no job).
-    dedup = _dedupe_vec_delta(
+    # The victim dbuckets derive from the CHECKPOINTED delta: a caller
+    # frame built from rand()/sample() re-evaluates to a different id set,
+    # so a collect over the raw expression could miss the dbuckets of ids
+    # the checkpoint kept and leave their stale postings behind.
+    # n_dbuckets and the postings-layout probe are driver-side reads.
+    dl = _dedupe_vec_delta(
         delta.select(F.col(id_col), F.col(vec_col)), id_col, vec_col
-    )
+    ).localCheckpoint()
     n_db = _read_n_dbuckets(spark, path)
-    dl, dbs, has_cells = run_concurrent(
-        lambda: dedup.localCheckpoint(),
-        lambda: _victim_dbs(dedup, n_db, id_col),
-        lambda: _any_partition_dirs(spark, postings_path, "cell"),
-    )
+    dbs = _victim_dbs(dl, n_db, id_col)
+    has_cells = _any_partition_dirs(spark, postings_path, "cell")
     assigned = assign_cells(dl, cents, id_col, vec_col, 1)
 
     old_keys = _victim_keys(spark, path, n_db, dbs, id_col)
@@ -504,16 +499,12 @@ def delete_from_ivf_index(
     postings_path = f"{path}/postings"
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
-    # Layer 0 (r15): the id-set checkpoint and its dbucket list overlap
-    # (the dbucket collect recomputes the batch-sized distinct — the id
-    # set is identical either way); n_dbuckets is a driver-side sidecar
-    # read (ms, no job).
-    ids_expr = vec_ids.select(id_col).distinct()
+    # the victim dbuckets derive from the CHECKPOINTED id set (a
+    # nondeterministic caller frame re-evaluates to different ids);
+    # n_dbuckets is a driver-side sidecar read (ms, no job)
+    ids = vec_ids.select(id_col).distinct().localCheckpoint()
     n_db = _read_n_dbuckets(spark, path)
-    ids, dbs = run_concurrent(
-        lambda: ids_expr.localCheckpoint(),
-        lambda: _victim_dbs(ids_expr, n_db, id_col),
-    )
+    dbs = _victim_dbs(ids, n_db, id_col)
     keys = F.broadcast(ids) if broadcast_ids else ids
     old = spark.read.parquet(postings_path)
     old_keys = _victim_keys(spark, path, n_db, dbs, id_col)
@@ -1128,19 +1119,17 @@ def upsert_pq_index(
     # r14 next-#2).  Layer by data dependency, run each layer's
     # independent members concurrently.
     #
-    # Layer 0: delta checkpoint ∥ the delta's dbucket list (recomputed
-    # from the batch-sized dedupe expression — the id SET is dedupe-
-    # invariant, so dbs is identical either way) ∥ the postings-layout
-    # probe.  n_dbuckets is a driver-side sidecar read (ms, no job).
-    dedup = _dedupe_vec_delta(
+    # Layer 0: the delta checkpoint, then the victim dbuckets derived
+    # from IT — a caller frame built from rand()/sample() re-evaluates to
+    # a different id set, so a collect over the raw expression could miss
+    # the dbuckets of ids the checkpoint kept (stale postings survive).
+    # n_dbuckets and the postings-layout probe are driver-side reads.
+    dl = _dedupe_vec_delta(
         delta.select(F.col(id_col), F.col(vec_col)), id_col, vec_col
-    )
+    ).localCheckpoint()
     n_db = _read_n_dbuckets(spark, path)
-    dl, dbs, has_cells = run_concurrent(
-        lambda: dedup.localCheckpoint(),
-        lambda: _victim_dbs(dedup, n_db, id_col),
-        lambda: _any_partition_dirs(spark, postings_path, "cell"),
-    )
+    dbs = _victim_dbs(dl, n_db, id_col)
+    has_cells = _any_partition_dirs(spark, postings_path, "cell")
     assigned = assign_cells(dl, cents, id_col, vec_col, 1)
     new_codes = pq_encode(dl, cb, vec_col=vec_col, id_col=id_col).join(
         assigned.select(id_col, "cell"), id_col
@@ -1321,14 +1310,12 @@ def delete_from_pq_index(
 
     # Same layering as delete_from_ivf_index (r15, VERDICT r14 next-#2):
     # the op was one sequential spine of ~9 driver actions.
-    # Layer 0: id-set checkpoint ∥ its dbucket list (recomputed from the
-    # batch-sized distinct — identical id set either way).
-    ids_expr = vec_ids.select(id_col).distinct()
+    # Layer 0: the id-set checkpoint, then its dbucket list derived from
+    # the checkpoint (a nondeterministic caller frame re-evaluates to
+    # different ids).
+    ids = vec_ids.select(id_col).distinct().localCheckpoint()
     n_db = _read_n_dbuckets(spark, path)
-    ids, dbs = run_concurrent(
-        lambda: ids_expr.localCheckpoint(),
-        lambda: _victim_dbs(ids_expr, n_db, id_col),
-    )
+    dbs = _victim_dbs(ids, n_db, id_col)
     keys = F.broadcast(ids) if broadcast_ids else ids
     old = spark.read.parquet(postings_path)
     old_keys = _victim_keys(spark, path, n_db, dbs, id_col)

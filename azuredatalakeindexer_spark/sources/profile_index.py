@@ -1,34 +1,46 @@
-"""Persisted MULTI-FIELD inverted index — index-served scoring profiles.
+"""Persisted MULTI-FIELD inverted index — the package's one index core.
 
 The reference's index models are multi-field with per-field
 searchability (`IndexModels/TextIndexModel.cs:24-34` — title/content/...
-each `IsSearchable`; `PathIndexModel.cs:15-16`), and the engine's
-scan-time `operators.search.scoring_profile_topk` already scores
-field-weighted multi-field BM25 — but until r9 the persisted index
-stored ONE text field, so a profile query against a saved index still
-had to rescan the corpus.  This module persists the multi-field layout
-and serves the profile from it:
+each `IsSearchable`; `PathIndexModel.cs:15-16`).  This module persists
+that layout and serves every index-side query type from it: scoring
+profiles, facets, synonyms, simple-query syntax, phrase / NEAR (filter or
+ranked), suggest, fuzzy, wildcard and highlighting.  The single-field
+text index (``text_index.py``) is a one-field index of this layout —
+profile scoring ``Σ_f w_f·bm25_f`` with one field at weight 1 is plain
+BM25 — and its functions are thin wrappers over this module.
 
-- ``<path>/postings`` — ``(term, id, tf, field, bucket)`` partitioned by
-  ``bucket = portable_hash64(term) % n_buckets`` and term-sorted within
-  files, exactly like the single-field index (``text_index.py``) with a
-  ``field`` discriminator column: a query's bucket IN-list statically
-  prunes directories, the term IN-list prunes row groups, and the field
-  residual is a cheap post-scan filter (fields are few; partitioning by
-  them would multiply directory count for no pruning win — the term
-  bucket is the selective axis);
-- ``<path>/doclens`` — ``(id, field, dl, dbucket)``: one row per
-  (document, searchable field) with that field's token count;
+- ``<path>/postings`` — ``(term, id, tf[, pos], field, bucket)``
+  partitioned by ``bucket = portable_hash64(term) % n_buckets`` and
+  term-sorted within files: a query's bucket IN-list statically prunes
+  directories, the term IN-list prunes row groups, and the field residual
+  is a cheap post-scan filter (fields are few; partitioning by them would
+  multiply directory count for no pruning win — the term bucket is the
+  selective axis).  ``pos`` (``positions=True``) is the sorted 1-based
+  token position list within the field — Lucene-style positional
+  postings for phrase / proximity;
+- ``<path>/doclens`` — ``(id, field, dl, buckets, dbucket)``: one row per
+  (document, searchable field) with that field's token count and the
+  postings buckets holding the doc's rows (the victim directory, see
+  :func:`_lens_from_postings`);
 - ``<path>/fieldstats`` — per-field ``(field, n_docs, avgdl, sum_dl)``
   corpus statistics (each field has its own dl/avgdl/df — Lucene
-  semantics, the same reason the scan-time operator aggregates per
-  field);
+  semantics), read driver-side (``read_meta_parquet``);
+- ``<path>/terms`` — the ``(field, term, df)`` vocabulary rollup,
+  range-partitioned and sorted by (field, term), written by build /
+  compaction and advanced by exact per-(field, term) deltas under each
+  in-place op's staged commit.  Suggest / fuzzy / wildcard expansion
+  serve from it (vocabulary-sized, never postings-sized) while no LSM
+  segment is pending;
 - ``<path>/docvals`` — ``(id, <attr cols>, dbucket)``: the filterable /
   boostable scalar attributes (the service's retrievable non-searchable
   fields) the magnitude/tag scoring functions read at query time;
-- ``<path>/meta`` — 1 row pinning ``n_buckets`` + the field/attr lists
-  so later ops refuse mismatched arguments instead of silently missing
-  buckets.
+- ``<path>/docstore`` (``store_fields=True``) — ``(id, field, text,
+  dbucket)``, the retrievable stored texts highlighting and substring
+  phrase predicates read by id;
+- ``<path>/meta`` + ``meta.json`` — pin ``n_buckets`` + the field/attr
+  lists so later ops refuse mismatched arguments instead of silently
+  missing buckets.
 
 Result parity is EXACT with :func:`scoring_profile_topk` on the indexed
 corpus (test-pinned; the DuckDB oracle replays the scan-time profile):
@@ -46,21 +58,212 @@ is a tiny aggregate of that same relation; doclens/docvals join by doc
 key on the candidate set only; the top-k is TakeOrderedAndProject.  The
 corpus is never rescanned.
 
-Maintenance (upsert/delete) follows the single-field in-place ops'
-affected-partition discipline under the same staged-commit journal
-(``sources/staging.py``).
+Maintenance: in-place upsert/delete rewrite only the affected postings
+buckets and doclens/docvals/docstore id-buckets, staged and promoted by
+journaled renames (``sources/staging.py``); the LSM tier
+(``profile_segments.py``) lands batches as O(batch) segments instead.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import math
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from azuredatalakeindexer_spark.functions.localrel import tiny_df
 from azuredatalakeindexer_spark.functions.text import portable_hash64, tokens
-from azuredatalakeindexer_spark.sources.text_index import _py_bucket, _sqld, _sqlstr
+
+
+def _py_bucket(term: str, n_buckets: int) -> int:
+    """Driver-side replica of ``portable_hash64(term, seed=0) % n_buckets``."""
+    h = int(hashlib.md5(f"0|{term}".encode()).hexdigest()[:15], 16)
+    return h % n_buckets
+
+
+def _sqlstr(s: str, escaped_literals: bool = False) -> str:
+    """Escape a value for embedding in a single-quoted Spark SQL string
+    literal (default lexer: backslash IS an escape character).
+
+    With ``spark.sql.parser.escapedStringLiterals=true`` (the legacy
+    lexer) backslash is NOT an escape: doubled backslashes would survive
+    un-escaped and the term would silently match nothing, and a quote
+    cannot be escaped portably — refuse loudly for the affected values
+    (ADVICE r14); values without backslash/quote embed unchanged, so the
+    conf stays usable for ordinary terms."""
+    if escaped_literals:
+        if "\\" in s or "'" in s:
+            raise ValueError(
+                "cannot embed a term containing a backslash or single "
+                "quote in a SQL string literal while "
+                "spark.sql.parser.escapedStringLiterals is enabled — "
+                "unset that conf for this session"
+            )
+        return s
+    return s.replace("\\", "\\\\").replace("'", "\\'")
+
+
+def _escaped_literals(spark: SparkSession) -> bool:
+    """Whether this session parses SQL string literals with the legacy
+    (no backslash-unescape) lexer — read once per query entry point and
+    threaded into ``_sqlstr``."""
+    try:
+        v = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        return str(v).lower() == "true"
+    except Exception:
+        return False
+
+
+def _sqld(v: float) -> str:
+    """A Spark SQL DOUBLE literal with the exact value of ``v``: Python's
+    repr is the shortest round-tripping form, and the SQL parser's
+    string->double conversion restores the identical bits.  Non-finite
+    values (caller-supplied inf/nan weights) have no SQL double literal —
+    raise a clear error instead of an opaque parse failure (ADVICE r14)."""
+    v = float(v)
+    if not math.isfinite(v):
+        raise ValueError(
+            f"scoring parameter must be finite, got {v!r} (check k1/b/weights)"
+        )
+    return f"{v!r}D"
+
+
+def _lens_from_postings(
+    postings_df: DataFrame,
+    all_keys: DataFrame,
+    id_col: str,
+    n_buckets: int,
+    *,
+    bsets: bool = True,
+) -> DataFrame:
+    """The doclens relation DERIVED from the postings relation the same
+    build/upsert already materializes — ``dl = sum(tf)`` (``tokens()``
+    drops empty strings, so the per-(doc, field) tf sum IS the token
+    count) and the victim-directory bucket set = ``collect_set(bucket)``:
+    zero additional hashing.
+
+    The ``buckets`` column is the per-doc victim directory (r9 verdict
+    wrong-#3 / missing-#2), stored as an ARRAY COLUMN on the doclens
+    relation rather than a separate directory: doclens is already
+    id-hash-partitioned, already read dbucket-pruned by every maintenance
+    op, and already rewritten under the same journal — so the bucket sets
+    ride along for free (and query-side doclens scans column-prune the
+    array away).  A maintenance batch learns which postings buckets hold a
+    replaced doc's STALE rows by exploding this column over the batch
+    ids' dbucket partitions — O(batch buckets) — instead of projecting
+    the ENTIRE postings relation per batch.  ``bsets=False`` keeps a
+    legacy (pre-bucket-set) index's layout through in-place maintenance.
+
+    ``all_keys`` supplies the complete (id, field) key set so zero-token
+    fields keep their ``dl=0`` rows — those rows carry liveness,
+    ``n_docs``, and per-field stats counts (a postings-only derivation
+    would silently drop them and skew BM25's idf).
+    """
+    keys = [id_col, "field"]
+    derived = postings_df.groupBy(*keys).agg(
+        F.sum("tf").cast("int").alias("dl"),
+        F.array_sort(F.collect_set("bucket")).alias("buckets"),
+    )
+    return all_keys.join(derived, keys, "left").select(
+        *keys,
+        F.coalesce(F.col("dl"), F.lit(0)).alias("dl"),
+        *(
+            [
+                F.coalesce(
+                    F.col("buckets"), F.array().cast("array<bigint>")
+                ).alias("buckets")
+            ]
+            if bsets
+            else []
+        ),
+        F.pmod(F.hash(F.col(id_col)), F.lit(n_buckets)).alias("dbucket"),
+    )
+
+
+def _victim_buckets(
+    spark: SparkSession,
+    path: str,
+    dkeys: DataFrame,
+    delta_dbuckets: list,
+    id_col: str,
+) -> list | None:
+    """The postings buckets holding stale rows of the batch's ids, from a
+    statically dbucket-pruned doclens read (see ``_lens_from_postings``) — or
+    None when the index predates the bucket-set column (callers fall back
+    to the full column-pruned postings projection: correct, O(index))."""
+    lens = spark.read.parquet(f"{path}/doclens")
+    if "buckets" not in lens.columns:
+        return None
+    return [
+        r["b"]
+        for r in lens.where(F.col("dbucket").isin(delta_dbuckets))
+        .join(dkeys, id_col, "left_semi")
+        .select(F.explode("buckets").alias("b"))
+        .distinct()
+        .collect()
+    ]
+
+
+def _term_counts(postings: DataFrame) -> DataFrame:
+    """``(field, term, n)`` pair counts of a postings-shaped relation —
+    postings rows are distinct (term, doc, field) triples, so ``n`` is
+    the document frequency contribution."""
+    return postings.groupBy("field", "term").agg(F.count(F.lit(1)).alias("n"))
+
+
+def _write_terms_rollup(terms_df: DataFrame, target: str) -> None:
+    """Write a ``(field, term, df)`` rollup range-partitioned and sorted by
+    (field, term), so a pushed ``field = f AND startswith(term, p)``
+    predicate prunes both whole files (range partitioner) and row groups
+    (min/max stats).  The relation is vocabulary-sized; rewriting it whole
+    per maintenance op is a metadata-class job next to any postings
+    write."""
+    terms_df.select(
+        "field", "term", F.col("df").cast("bigint").alias("df")
+    ).repartitionByRange("field", "term").sortWithinPartitions(
+        "field", "term"
+    ).write.mode("overwrite").parquet(target)
+
+
+def _advance_terms_rollup(
+    spark: SparkSession,
+    path: str,
+    target: str,
+    added: DataFrame | None,
+    removed: DataFrame,
+    post_state: DataFrame,
+) -> None:
+    """Stage ``<path>/terms`` advanced by the exact per-(field, term)
+    delta — the same discipline the fieldstats use for ``sum_dl``.
+    ``added`` / ``removed`` are :func:`_term_counts` of inserted /
+    vanished postings rows (batch-sized).  An index without a rollup
+    (built before it existed) gets one recounted from ``post_state``, a
+    lazy postings-shaped frame of the POST-op state — the one-time
+    upgrade path."""
+    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
+
+    if not hadoop_path_exists(spark, f"{path}/terms"):
+        _write_terms_rollup(_term_counts(post_state).withColumnRenamed("n", "df"), target)
+        return
+    net = removed.select("field", "term", (-F.col("n")).cast("bigint").alias("_d"))
+    if added is not None:
+        net = net.unionByName(
+            added.select("field", "term", F.col("n").cast("bigint").alias("_d"))
+        )
+    delta = net.groupBy("field", "term").agg(F.sum("_d").alias("_d"))
+    merged = (
+        spark.read.parquet(f"{path}/terms")
+        .join(delta, ["field", "term"], "full_outer")
+        .select(
+            "field",
+            "term",
+            (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("_d"), F.lit(0))).alias("df"),
+        )
+        .where(F.col("df") > 0)
+    )
+    _write_terms_rollup(merged, target)
 
 
 def _stack_fields(docs: DataFrame, field_cols, id_col: str) -> DataFrame:
@@ -124,10 +327,9 @@ def _postings_rows(
     toks) relation — one map-side-combined aggregate; the shuffle carries
     distinct (term, doc, field) triples, not the token stream.  With
     ``positions`` each row additionally carries the sorted 1-based
-    position list WITHIN its field — the profile twin of the text
-    surface's Lucene-style positional postings (``text_index.py::
-    _postings_from``), paid only when asked for (the positional shuffle
-    carries occurrences, not distinct triples)."""
+    position list WITHIN its field — Lucene-style positional postings,
+    paid only when asked for (the positional shuffle carries
+    occurrences, not distinct triples)."""
     if positions:
         occ = stacked.select(
             F.col(id_col), "field", F.posexplode("_toks").alias("_p", "term")
@@ -153,8 +355,7 @@ def _write_fieldstats_from(
     doclens_df: DataFrame, path: str, target: str | None = None
 ) -> None:
     """Per-field ``(field, n_docs, avgdl, sum_dl)`` from a doclens
-    relation — the multi-field analog of ``text_index._write_stats_from``
-    (``sum_dl`` exact bigint; ``avgdl = sum/count`` is what ``avg``
+    relation (``sum_dl`` exact bigint; ``avgdl = sum/count`` is what ``avg``
     computes, and dl sums of integers are exact in doubles, so scores
     replayed from these stats are bit-identical to the scan-time agg).
     One aggregate job collects the f rows, then they land driver-side
@@ -200,7 +401,7 @@ def build_profile_index(
     persisted to ``docvals`` for the scoring functions (magnitude / tag)
     and filters.  Cost: one corpus scan stacked over the fields + one
     (term, doc, field) aggregate + bucket-partitioned writes — the
-    amortized-away pass, same discipline as ``build_text_index``.
+    amortized-away pass, like ``build_ivf_index``.
 
     ``store_fields=True`` additionally writes ``<path>/docstore`` —
     ``(id, field, text, dbucket)``, one row per (doc, searchable field)
@@ -208,23 +409,21 @@ def build_profile_index(
     doclens.  It is the profile layout's *retrievable*-field store (the
     reference marks fields retrievable, `IndexModels/TextIndexModel.cs:
     24-34`) and what ``simple_query_profile_from_index`` evaluates
-    PHRASE predicates against (substring semantics need stored text).
-    All maintenance ops — in-place and segmented — advance it.
+    PHRASE predicates against (substring semantics need stored text)
+    and highlights fetch by id.  All maintenance ops — in-place and
+    segmented — advance it.
 
     ``positions=True`` stores per-field positional postings (sorted
-    1-based token positions) so NEAR/proximity and token-adjacency
-    phrase predicates compose with scoring profiles
-    (``near_profile_from_index``, ``phrase_mode="positions"``, r13) —
-    the profile twin of ``build_text_index(positions=True)``.  Positions
-    ride EVERY maintenance path: in-place upsert/delete preserve the
-    column, segmented upserts regenerate it for the batch, tombstone
-    deletes are position-free by construction, and compaction folds the
-    live lists back into the base — same contract as the text surface.
+    1-based token positions) so exact-phrase and NEAR/proximity queries
+    are served from the index — ranked (:func:`_ranked_positional`) or
+    composed with scoring profiles (``near_profile_from_index``,
+    ``phrase_mode="positions"``).  Positions ride EVERY maintenance path:
+    in-place upsert/delete preserve the column, segmented upserts
+    regenerate it for the batch, tombstone deletes are position-free by
+    construction, and compaction folds the live lists back into the base.
     """
     if not field_cols:
         raise ValueError("build_profile_index needs at least one field")
-    from azuredatalakeindexer_spark.sources.text_index import _lens_from_postings
-
     spark = docs.sparkSession
     stacked = _stack_fields(docs, field_cols, id_col)
     postings = _postings_rows(stacked, id_col, n_buckets, positions=positions)
@@ -241,27 +440,27 @@ def build_profile_index(
         # write and the fieldstats rollup both consume the materialized
         # frame CONCURRENTLY instead of fieldstats re-listing + re-reading
         # the doclens directory it just wrote behind it (r14: two jobs +
-        # a listing off the build's critical path).
+        # a listing off the build's critical path).  The (field, term, df)
+        # vocabulary rollup is a read-back of the same written postings,
+        # independent of doclens — same concurrent layer.
         postings.repartition("bucket").sortWithinPartitions("term").write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(f"{path}/postings")
+        written = spark.read.parquet(f"{path}/postings")
         pairs = docs.select(
             F.col(id_col),
             F.explode(F.array(*[F.lit(f) for f in field_cols])).alias("field"),
         )
-        doclens = _lens_from_postings(
-            spark.read.parquet(f"{path}/postings"),
-            pairs,
-            id_col,
-            n_buckets,
-            per_field=True,
-        ).localCheckpoint()
+        doclens = _lens_from_postings(written, pairs, id_col, n_buckets).localCheckpoint()
         run_concurrent(
             lambda: doclens.repartition("dbucket")
             .write.mode("overwrite")
             .partitionBy("dbucket")
             .parquet(f"{path}/doclens"),
             lambda: _write_fieldstats_from(doclens, path),
+            lambda: _write_terms_rollup(
+                _term_counts(written).withColumnRenamed("n", "df"), f"{path}/terms"
+            ),
         )
 
     # docvals and docstore are corpus projections independent of the
@@ -323,9 +522,9 @@ def build_profile_index(
 
 def _read_meta(spark: SparkSession, path: str) -> tuple[int, list[str], list[str]]:
     """Index layout (n_buckets, searchable fields, persisted attrs) —
-    prefers the ``meta.json`` sidecar (driver-side FS read, no Spark
-    job); falls back to the parquet ``meta`` relation for indexes built
-    before the sidecar."""
+    prefers the ``meta.json`` sidecar; falls back to the parquet ``meta``
+    relation for indexes built before the sidecar — both read
+    driver-side, no Spark job."""
     from azuredatalakeindexer_spark.sources.ann_index import _hadoop_fs
     from azuredatalakeindexer_spark.sources.staging import _read_file
 
@@ -333,10 +532,35 @@ def _read_meta(spark: SparkSession, path: str) -> tuple[int, list[str], list[str
     if fs.exists(hpath):
         m = json.loads(_read_file(spark, fs, f"{path}/meta.json"))
         return int(m["n_buckets"]), list(m["fields"]), list(m["attrs"])
-    row = spark.read.parquet(f"{path}/meta").first()
+    from azuredatalakeindexer_spark.functions.localrel import read_meta_parquet
+
+    rows = read_meta_parquet(spark, f"{path}/meta")
+    row = rows[0] if rows else spark.read.parquet(f"{path}/meta").first().asDict()
     fields = [f for f in row["fields"].split(",") if f]
     attrs = [a for a in row["attrs"].split(",") if a]
     return int(row["n_buckets"]), fields, attrs
+
+
+def _fieldstats_rows(spark: SparkSession, path: str) -> list[dict]:
+    """The f-row ``fieldstats`` relation, read DRIVER-SIDE
+    (``read_meta_parquet``: pyarrow over the Hadoop FS, no Spark job — a
+    ``collect()`` of f rows is a full scheduling round trip on every
+    serve and maintenance op); falls back to the ordinary Spark read on
+    any surprise."""
+    from azuredatalakeindexer_spark.functions.localrel import read_meta_parquet
+
+    rows = read_meta_parquet(spark, f"{path}/fieldstats")
+    if rows is None:
+        rows = [r.asDict() for r in spark.read.parquet(f"{path}/fieldstats").collect()]
+    return rows
+
+
+def _check_fields(op: str, flds, idx_fields) -> None:
+    for fld in flds:
+        if fld not in idx_fields:
+            raise ValueError(
+                f"{op}: field {fld!r} is not indexed (index fields: {idx_fields})"
+            )
 
 
 def query_profile_index(
@@ -375,8 +599,8 @@ def query_profile_index(
     ``$filter`` + search combination for the profile surface: it
     restricts which documents can be RETURNED — a candidate-sized
     semi-join before the top-k — while every corpus statistic (per-field
-    df/N/avgdl) stays index-global, the same Lucene/Azure semantics as
-    ``query_text_index(filter_ids=...)``.  ``broadcast_filter=False``
+    df/N/avgdl) stays index-global — Lucene/Azure semantics: a filter
+    narrows the match set, it never reweights idf.  ``broadcast_filter=False``
     switches to a shuffled semi-join for non-broadcastable filter sets.
     """
     if not profile:
@@ -389,14 +613,9 @@ def query_profile_index(
         (fld, sorted({t.lower() for t in terms}), float(w))
         for fld, (terms, w) in profile.items()
     ]
-    for fld, terms, _w in fields:
-        if fld not in idx_fields:
-            raise ValueError(
-                f"query_profile_index: field {fld!r} is not indexed "
-                f"(index fields: {idx_fields})"
-            )
-        if not terms:
-            raise ValueError("every profile field needs at least one query term")
+    _check_fields("query_profile_index", list(profile), idx_fields)
+    if not all(terms for _f, terms, _w in fields):
+        raise ValueError("every profile field needs at least one query term")
     if boost is not None and boost[3] <= boost[2]:
         raise ValueError(
             "boost range needs hi > lo (got lo=%r, hi=%r)" % (boost[2], boost[3])
@@ -456,68 +675,70 @@ def query_profile_index(
             .select(id_col, "field", "term", "tf")
         )
 
-    # per-(field, term) document frequency: candidate-sized aggregate;
-    # missing pairs mean df=0 — their contribution is exactly 0.0 anyway.
-    # The df aggregate and the f-row fieldstats read are independent
-    # planner-side collects — overlap them (r14) instead of stacking two
-    # driver round-trips on every serve.
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-
-    df_rows, fs_rows = run_concurrent(
-        lambda: matches.groupBy("field", "term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .collect(),
-        lambda: spark.read.parquet(f"{path}/fieldstats").collect(),
-    )
-    dfmap = {(r["field"], r["term"]): int(r["df"]) for r in df_rows}
-    # a field absent from fieldstats means the index is empty (delete-all
-    # sentinel): no candidates exist, so the (0, 0.0) defaults are inert
-    fsmap = {r["field"]: (int(r["n_docs"]), float(r["avgdl"])) for r in fs_rows}
-
-    # pivot the candidate matches into the scan-time operator's per-doc
-    # column layout: _tf{fi}_{ti} + (joined) _dl{fi}.  The per-term
-    # expressions are built as SQL strings (one F.expr parse each) instead
-    # of Column-object chains: each Column operator is a py4j round trip,
-    # and at fuzzy/wildcard expansion sizes (max_expansions x |fields| ~
-    # 100 terms) the chains cost seconds of pure driver latency per serve
-    # (measured 5.5-6.0 s Column-built vs 0.5-0.8 s via expr for 100
-    # terms, guide §4 — the JVM boundary is the cost, not the plan).
-    # Scores stay bit-identical: tests/test_expr_parity.py pins the two
-    # failure modes the string path introduces (literal escaping and
-    # exact double round-trips through the SQL lexer) value-bit-exactly,
-    # and the serving-vs-scan-operator parity suites pin the end-to-end
-    # scores (ADVICE r14: say what the tests pin, not more).
-    from azuredatalakeindexer_spark.sources.text_index import _escaped_literals
-
+    # Scoring runs in ONE Spark job.  Each match row picks up its (doc,
+    # field) dl and, by one broadcast hash join on (field, term), its df —
+    # a candidate-sized aggregate of the same pruned matches (a postings
+    # row exists iff tf > 0, so the count is Lucene df) — with the field's
+    # N/avgdl from the f-row fieldstats, and computes its own BM25
+    # contribution; one per-doc aggregate then sums each (field, term)'s
+    # contribution into its own column.  The statistics ride as COLUMNS,
+    # not literals, so the generated code is the same from one serve to
+    # the next (no recompile after every maintenance op).  An empty index
+    # (delete-all sentinel) has no fieldstats rows and no matches.  A doc lacking a pair gets
+    # exactly 0.0 there, which is the scan-time operator's zero-tf
+    # contribution, so the fold below is bit-identical to it.
+    #
+    # The whole aggregate is ONE SQL string (a single F.expr parse)
+    # instead of Column-object chains: each Column operator is a py4j
+    # round trip, and at fuzzy/wildcard expansion sizes (max_expansions x
+    # |fields| ~ 100 terms) the chains cost seconds of pure driver latency
+    # per serve (measured 5.5-6.0 s Column-built vs 0.5-0.8 s via one expr
+    # per term for 100 terms, guide §4 — the JVM boundary is the cost,
+    # not the plan).  Scores stay bit-identical: tests/test_expr_parity.py
+    # pins the two failure modes the string path introduces (literal
+    # escaping and exact double round-trips through the SQL lexer)
+    # value-bit-exactly, and the serving-vs-scan-operator parity suites
+    # pin the end-to-end scores (ADVICE r14: say what the tests pin, not
+    # more).
     esc = _escaped_literals(spark)
-    tf_cols = [
-        F.expr(
-            f"coalesce(sum(CASE WHEN (field = '{_sqlstr(fld, esc)}') AND "
-            f"(term = '{_sqlstr(t, esc)}') THEN tf END), 0)"
-        ).alias(f"_tf{fi}_{ti}")
+    tf = "CAST(tf AS DOUBLE)"
+    norm = (
+        f"CASE WHEN (avgdl > 0) THEN (({_sqld(b)} * dl) / avgdl) ELSE 0.0D END"
+    )
+    idf = (
+        f"ln({_sqld(1.0)} + (((n_docs - df) + {_sqld(0.5)}) / (df + {_sqld(0.5)})))"
+    )
+    contrib = (
+        f"((({idf} * {tf}) * {_sqld(k1 + 1.0)}) / "
+        f"({tf} + ({_sqld(k1)} * ({_sqld(1.0 - b)} + {norm}))))"
+    )
+    contribs = [
+        f"coalesce(sum(CASE WHEN (field = '{_sqlstr(fld, esc)}') AND "
+        f"(term = '{_sqlstr(t, esc)}') THEN _contrib END), 0.0D) AS _c{fi}_{ti}"
         for fi, (fld, terms, _w) in enumerate(fields)
         for ti, t in enumerate(terms)
     ]
-    per = matches.groupBy(id_col).agg(*tf_cols)
-
-    dls_src = (
+    dfs = (
+        matches.groupBy("field", "term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .join(
+            spark.read.parquet(f"{path}/fieldstats").select("field", "n_docs", "avgdl"),
+            "field",
+        )
+    )
+    dls = (
         dls_rel
         if dls_rel is not None
         else spark.read.parquet(f"{path}/doclens").where(F.col("field").isin(flds))
     )
-    dls = (
-        dls_src.join(per.select(id_col), id_col, "left_semi")
+    scored = (
+        matches.join(dls.select(id_col, "field", "dl"), [id_col, "field"])
+        .join(F.broadcast(dfs), ["field", "term"])
+        .withColumn("_contrib", F.expr(contrib))
         .groupBy(id_col)
-        .agg(
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col("field") == fld, F.col("dl"))), F.lit(0)
-                ).alias(f"_dl{fi}")
-                for fi, fld in enumerate(flds)
-            ]
-        )
+        .agg(F.expr(f"struct({', '.join(contribs)})").alias("_p"))
+        .select(id_col, "_p.*")
     )
-    scored = per.join(dls, id_col)
     if need_attrs:
         vals = (
             vals_rel
@@ -527,30 +748,13 @@ def query_profile_index(
         scored = scored.join(vals, id_col)
 
     # identical association order to scoring_profile_topk: per-field
-    # contributions in sorted-term order, fields in profile order.  One
-    # SQL string for the whole scoring tree (same py4j-boundary rationale
-    # as tf_cols above; the parse yields the exact Column-built tree —
-    # parenthesization reproduces Python's left-associative operators).
+    # contributions in sorted-term order, fields in profile order (the
+    # parenthesization reproduces Python's left-associative operators)
     parts = []
     for fi, (fld, terms, w) in enumerate(fields):
-        n_docs, avgdl = fsmap.get(fld, (0, 0.0))
-        norm = (
-            f"CASE WHEN ({_sqld(avgdl)} > 0) THEN "
-            f"(({_sqld(b)} * _dl{fi}) / {_sqld(avgdl)}) ELSE 0.0D END"
-        )
-        fscore = None
-        for ti, t in enumerate(terms):
-            tf = f"CAST(_tf{fi}_{ti} AS DOUBLE)"
-            df = repr(int(dfmap.get((fld, t), 0)))
-            idf = (
-                f"ln({_sqld(1.0)} + ((({repr(int(n_docs))} - {df}) + "
-                f"{_sqld(0.5)}) / ({df} + {_sqld(0.5)})))"
-            )
-            contrib = (
-                f"((({idf} * {tf}) * {_sqld(k1 + 1.0)}) / "
-                f"({tf} + ({_sqld(k1)} * ({_sqld(1.0 - b)} + {norm}))))"
-            )
-            fscore = contrib if fscore is None else f"({fscore} + {contrib})"
+        fscore = "_c{}_0".format(fi)
+        for ti in range(1, len(terms)):
+            fscore = f"({fscore} + _c{fi}_{ti})"
         parts.append(f"({_sqld(w)} * {fscore})")
     total_sql = parts[0]
     for p in parts[1:]:
@@ -639,14 +843,9 @@ def facets_from_index(
         ):
             terms = terms[0]  # accept the profile's (terms, weight) shape
         fields.append((fld, sorted({t.lower() for t in terms})))
-    for fld, terms in fields:
-        if fld not in idx_fields:
-            raise ValueError(
-                f"facets_from_index: field {fld!r} is not indexed "
-                f"(index fields: {idx_fields})"
-            )
-        if not terms:
-            raise ValueError("every query field needs at least one term")
+    _check_fields("facets_from_index", list(query), idx_fields)
+    if not all(terms for _f, terms in fields):
+        raise ValueError("every query field needs at least one term")
     for c in facet_cols:
         if c not in idx_attrs:
             raise ValueError(
@@ -723,9 +922,10 @@ def _require_unsegmented_profile(spark: SparkSession, path: str, op: str) -> Non
 
 def _dedupe_profile_delta(delta: DataFrame, id_col: str, cols) -> DataFrame:
     """One deterministic row per id within an upsert batch: max over the
-    row's (field, attr) struct — the multi-column mirror of
-    ``text_index._dedupe_delta`` (lexicographically greatest version wins;
-    callers with a real ordering column should pre-resolve LWW first)."""
+    row's (field, attr) struct (lexicographically greatest version wins,
+    deterministic across runs and engines; callers with a real ordering
+    column should pre-resolve last-writer-wins first, as the reference
+    dedupes a batch before posting it)."""
     packed = delta.groupBy(id_col).agg(
         F.max(F.struct(*[F.col(c) for c in cols])).alias("_v")
     )
@@ -743,25 +943,36 @@ def upsert_profile_index(
     """MergeOrUpload into the saved multi-field index — the reference's
     batch-upsert contract (`AzureSearchIndexer/BatchingUploader.cs:34`)
     for the profile-serving layout: new documents inserted, existing ones
-    replaced across EVERY searchable field and persisted attribute.
-    Returns ``(id_col, status)`` with 201=created / 200=modified.
+    replaced across EVERY searchable field and persisted attribute (their
+    OLD postings disappear even for terms the new text no longer
+    contains).  Returns ``(id_col, status)`` with 201=created /
+    200=modified.
 
-    Cost shape mirrors ``upsert_text_index``: the delta is tokenized and
-    aggregated batch-sized; victims are located via a column-pruned
-    (id, bucket) postings projection; ONLY affected postings buckets and
-    affected doclens/docvals dbuckets are rewritten — all staged and
-    promoted by one journaled rename pass (``sources/staging.py``), with
-    the per-field stats recomputed from the post-merge doclens under the
-    same commit.  After the upsert, ``query_profile_index`` answers
-    bit-identically to a fresh build over (base ∖ replaced) ∪ delta
-    (test-pinned; the oracle replays the scan-time profile on that
-    logical corpus).
+    Cost shape, deliberately NOT a rebuild: the delta is tokenized and
+    aggregated batch-sized; victims are located via the doclens
+    bucket-set column (a column-pruned (id, bucket) postings projection
+    on legacy indexes); ONLY affected postings buckets and affected
+    doclens/docvals/docstore dbuckets are rewritten — all staged and
+    promoted by one journaled rename pass (``sources/staging.py``): a
+    pre-journal crash leaves the old index serving bit-identical results,
+    a mid-promotion one rolls forward deterministically from the journal.
+    The per-field stats are recomputed from the post-merge doclens and
+    the terms rollup advanced by the batch's exact (field, term) delta
+    under the same commit.  An index emptied by a delete-all (typed 0-row
+    unpartitioned sentinels) takes whole-directory swaps back to a
+    partitioned layout.  After the upsert, queries answer bit-identically
+    to a fresh build over (base ∖ replaced) ∪ delta (test-pinned; the
+    oracle replays the scan-time operators on that logical corpus).
 
     ``broadcast_ids=False`` switches every delta-id lookup (victims,
     statuses, keep anti-joins) to shuffled joins for rebuild-sized
     batches whose id set is not driver-broadcastable — the same contract
-    as ``upsert_text_index(broadcast_ids=False)``.
+    as ``merge_upsert(broadcast_batch_keys=False)``.
     """
+    from azuredatalakeindexer_spark.sources.ann_index import (
+        _partition_dir_names,
+        hadoop_path_exists,
+    )
     from azuredatalakeindexer_spark.sources.staging import (
         StagedCommit,
         recover_for_maintenance,
@@ -773,10 +984,6 @@ def upsert_profile_index(
     # a column may be both searchable and an attribute (e.g. source):
     # dedupe the struct's column list or the unpack is ambiguous
     cols = list(dict.fromkeys(list(idx_fields) + list(idx_attrs)))
-    from azuredatalakeindexer_spark.sources.text_index import (
-        _lens_from_postings,
-        _victim_buckets,
-    )
 
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
 
@@ -790,6 +997,12 @@ def upsert_profile_index(
         lambda: "buckets" in spark.read.parquet(f"{path}/doclens").columns,
         lambda: "pos" in spark.read.parquet(postings_path).columns,
     )
+    # a delete-all leaves typed 0-row UNPARTITIONED sentinels: no
+    # partition directory means no rows (partition dirs only exist with
+    # data files), so one driver-side listing each decides whole-dir
+    # swaps — no emptiness job
+    base_empty = not _partition_dir_names(spark, postings_path, "bucket")
+    doclens_empty = not _partition_dir_names(spark, f"{path}/doclens", "dbucket")
     # stacked is consumed only by new_postings/new_lens, which are
     # themselves checkpointed — re-deriving it from the checkpointed
     # deduped batch inside those jobs is cheaper than a third
@@ -802,8 +1015,9 @@ def upsert_profile_index(
     ]
 
     # The pre-write critical path is latency-bound sequential driver
-    # actions (same r12 finding as upsert_text_index) — layer by data
-    # dependency and run each layer's independent members concurrently.
+    # actions (r12: ~14 serial fixed job latencies, over half the
+    # measured upsert wall) — layer by data dependency and run each
+    # layer's independent members concurrently.
     #
     # Layer 1: the delta postings checkpoint and the batch's id-hash
     # partition list.
@@ -854,7 +1068,7 @@ def upsert_profile_index(
             F.explode(F.array(*[F.lit(f) for f in idx_fields])).alias("field"),
         )
         new_lens = _lens_from_postings(
-            new_postings, pairs, id_col, n_buckets, per_field=True, bsets=has_bsets
+            new_postings, pairs, id_col, n_buckets, bsets=has_bsets
         ).localCheckpoint()
         dkeep = (
             spark.read.parquet(f"{path}/doclens")
@@ -872,6 +1086,9 @@ def upsert_profile_index(
         return new_lens, dmerged
 
     def _chain_statuses():
+        # statuses are judged from the DOCLENS side: every existing doc
+        # has doclens rows, but a zero-token doc has no postings and a
+        # postings-side lookup would misreport its replacement as 201
         existing = (
             spark.read.parquet(f"{path}/doclens")
             .where(F.col("dbucket").isin(daffected))
@@ -895,8 +1112,16 @@ def upsert_profile_index(
 
     commit = StagedCommit(spark, path)
 
+    def _swap_dbuckets(rel: str) -> None:
+        if doclens_empty:
+            commit.swap(rel, rel)  # sentinel → clean partitioned layout
+            return
+        for b in daffected:
+            # every delta dbucket carries its own delta rows, so none empties
+            commit.swap(f"{rel}/dbucket={b}", f"{rel}/dbucket={b}")
+
     # every tier's staged write derives from checkpointed batch-sized
-    # frames or pre-promote live reads no other tier moves — five
+    # frames or pre-promote live reads no other tier moves — six
     # mutually independent actions, submitted concurrently so their
     # scheduling + dynamic-partition commit latencies overlap
     # (run_concurrent); promote stays one sequential rename pass
@@ -914,14 +1139,15 @@ def upsert_profile_index(
         merged.repartition("bucket").sortWithinPartitions("term").write.partitionBy(
             "bucket"
         ).parquet(commit.stage("postings"))
-        from azuredatalakeindexer_spark.sources.ann_index import (
-            _partition_dir_names,
-        )
-
+        if base_empty:
+            commit.swap("postings", "postings")
+            return
         present = [
             int(n.split("=", 1)[1])
             for n in _partition_dir_names(spark, commit.stage("postings"), "bucket")
         ]
+        # a victim bucket whose postings ALL belonged to replaced docs
+        # whose new terms hash elsewhere (zero survivors) is removed
         for b in affected:
             if b in present:
                 commit.swap(f"postings/bucket={b}", f"postings/bucket={b}")
@@ -932,9 +1158,7 @@ def upsert_profile_index(
         dmerged.repartition("dbucket").write.partitionBy("dbucket").parquet(
             commit.stage("doclens")
         )
-        for b in daffected:
-            # every delta dbucket carries its own delta rows, so none empties
-            commit.swap(f"doclens/dbucket={b}", f"doclens/dbucket={b}")
+        _swap_dbuckets("doclens")
 
     def _w_fieldstats() -> None:
         # per-field stats from the POST-state doclens (unaffected live
@@ -947,6 +1171,28 @@ def upsert_profile_index(
         )
         _write_fieldstats_from(stats_src, path, target=commit.stage("fieldstats"))
         commit.swap("fieldstats", "fieldstats")
+
+    def _w_terms() -> None:
+        # exact (field, term, df) delta: the delta's new pairs minus the
+        # replaced docs' old pairs (a victim-bucket-pruned live read,
+        # pre-promote) — both batch-sized; post_state only feeds the
+        # one-time rollup upgrade of a pre-rollup index
+        live = spark.read.parquet(postings_path)
+        _advance_terms_rollup(
+            spark,
+            path,
+            commit.stage("terms"),
+            added=_term_counts(new_postings),
+            removed=_term_counts(
+                live.where(F.col("bucket").isin(affected)).join(
+                    dkeys, id_col, "left_semi"
+                )
+            ),
+            post_state=live.join(dkeys, id_col, "left_anti")
+            .select("field", "term")
+            .unionByName(new_postings.select("field", "term")),
+        )
+        commit.swap("terms", "terms")
 
     def _w_docvals() -> None:
         new_vals = deduped.select(
@@ -964,13 +1210,12 @@ def upsert_profile_index(
         vkeep.unionByName(new_vals).repartition("dbucket").write.partitionBy(
             "dbucket"
         ).parquet(commit.stage("docvals"))
-        for b in daffected:
-            commit.swap(f"docvals/dbucket={b}", f"docvals/dbucket={b}")
+        _swap_dbuckets("docvals")
 
     def _w_docstore() -> None:
-        # docstore (stored per-field texts, phrase-enabled indexes):
-        # replace the delta docs' rows in their own dbuckets under the
-        # same journal — identical partition discipline to docvals
+        # docstore (stored per-field texts): replace the delta docs' rows
+        # in their own dbuckets under the same journal — identical
+        # partition discipline to docvals
         new_store = _stack_stored(deduped, idx_fields, id_col, n_buckets)
         skeep = (
             spark.read.parquet(f"{path}/docstore")
@@ -982,16 +1227,13 @@ def upsert_profile_index(
         skeep.unionByName(new_store).repartition("dbucket").write.partitionBy(
             "dbucket"
         ).parquet(commit.stage("docstore"))
-        for b in daffected:
-            commit.swap(f"docstore/dbucket={b}", f"docstore/dbucket={b}")
-
-    from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
+        _swap_dbuckets("docstore")
 
     run_concurrent(
         _w_postings,
         _w_doclens,
         _w_fieldstats,
+        _w_terms,
         _w_docvals if idx_attrs else None,
         _w_docstore if hadoop_path_exists(spark, f"{path}/docstore") else None,
     )
@@ -1011,13 +1253,19 @@ def delete_from_profile_index(
     blob contract (J2) for the profile-serving layout: victims leave
     every tier (postings across all fields, doclens, docvals) under ONE
     promotion journal, per-field stats recomputed from the survivors.
-    Returns the number of documents removed; absent ids are a no-op.
-    Deleting the last document drops doclens/docvals to typed 0-row
-    unpartitioned sentinels (a partitioned dir with zero data files
-    cannot be re-read); ``upsert_profile_index`` is not sentinel-routing
-    (rebuild with ``build_profile_index`` after a delete-all — the
-    in-place single-field index carries that path; here it would
-    duplicate it for no serving win).
+    Returns the number of documents removed; absent ids are a no-op
+    (idempotent — redelivered delete events are harmless, and no commit
+    is opened).  Removal is counted from the doclens side (a zero-token
+    doc has no postings).  Deleting the last document drops every tier to
+    a typed 0-row unpartitioned sentinel (a partitioned dir with zero data
+    files cannot be re-read); ``upsert_profile_index`` swaps whole
+    directories back in on it.  The terms rollup loses the victims'
+    (field, term) pairs under the same journal.
+
+    ``broadcast_ids=True`` is the incremental default.  For bulk purges
+    whose id set is not driver-broadcastable pass ``False``: every victim
+    lookup / anti-join becomes a shuffled join, mirroring
+    ``merge_upsert(broadcast_batch_keys=False)``.
     """
     from azuredatalakeindexer_spark.sources.ann_index import _partition_dir_names
     from azuredatalakeindexer_spark.sources.staging import (
@@ -1032,11 +1280,10 @@ def delete_from_profile_index(
     doclens_path = f"{path}/doclens"
     postings_path = f"{path}/postings"
     from azuredatalakeindexer_spark.functions.parallel import run_concurrent
-    from azuredatalakeindexer_spark.sources.text_index import _victim_buckets
 
-    # Layered like delete_from_text_index (r12): the pre-write critical
-    # path is latency-bound sequential driver actions — run each layer's
-    # independent members concurrently.
+    # Layered (r12): the pre-write critical path is latency-bound
+    # sequential driver actions — run each layer's independent members
+    # concurrently.
     #
     # Layer 1 (r14 fold): ONE job checkpoints the distinct ids WITH their
     # dbucket column, so the dead ids' own partition list (statically
@@ -1187,6 +1434,31 @@ def delete_from_profile_index(
         _write_fieldstats_from(survivors, path, target=commit.stage("fieldstats"))
         commit.swap("fieldstats", "fieldstats")
 
+    def _w_terms() -> None:
+        if index_emptied:
+            _write_terms_rollup(
+                spark.createDataFrame([], "field string, term string, df bigint"),
+                commit.stage("terms"),
+            )
+            commit.swap("terms", "terms")
+            return
+        # the victims' (field, term) pairs leave the rollup: a victim-
+        # bucket-pruned live read (pre-promote), batch-sized
+        live = spark.read.parquet(postings_path)
+        _advance_terms_rollup(
+            spark,
+            path,
+            commit.stage("terms"),
+            added=None,
+            removed=_term_counts(
+                live.where(F.col("bucket").isin(affected)).join(
+                    keys, id_col, "left_semi"
+                )
+            ),
+            post_state=live.join(keys, id_col, "left_anti"),
+        )
+        commit.swap("terms", "terms")
+
     def _w_docvals() -> None:
         # single consumer (the staged write) — no checkpoint needed
         vkeep = (
@@ -1238,6 +1510,7 @@ def delete_from_profile_index(
         _w_postings if affected else None,
         _w_doclens,
         _w_fieldstats,
+        _w_terms if affected or index_emptied else None,
         _w_docvals if idx_attrs else None,
         _w_docstore if hadoop_path_exists(spark, f"{path}/docstore") else None,
     )
@@ -1266,7 +1539,7 @@ def synonyms_profile_from_index(
     compose with searchable multi-field models
     (`IndexModels/TextIndexModel.cs:24-34`) — each field's term set is
     widened through the model-sized ``(term, synonym)`` relation exactly
-    like the single-field ``synonyms_from_index``, then answered by
+    like the scan-time ``expand_query_terms``, then answered by
     ``query_profile_index``.  Expansion only ADDS terms, so the serving
     plan stays the bucket-pruned, term-pushed multi-field read (more
     buckets, same shape); results are bit-identical to
@@ -1330,8 +1603,7 @@ def simple_query_profile_from_index(
     semi/anti-join against its own pruned postings slice restricted to
     the searched fields (on a segmented index, one liveness-resolved
     slice over all filter terms) — filters narrow the RETURNABLE set
-    without reweighting idf, the same Lucene/Azure semantics as the
-    single-field ``simple_query_from_index``.
+    without reweighting idf (Lucene/Azure semantics).
 
     PHRASE predicates (``+"a phrase"`` / ``-"a phrase"``) are substring
     semantics over stored text: a required phrase must appear in AT LEAST
@@ -1356,8 +1628,8 @@ def simple_query_profile_from_index(
     serves phrase predicates from POSITIONAL postings instead — Lucene
     PhraseQuery semantics: the phrase's whitespace tokens must appear
     ADJACENT in at least one weighted field (position-list intersection,
-    ``|∩_i (P_i − i)| > 0``, the same execution as the text surface's
-    ``query_phrase_index``), cost |postings of the phrase terms| with no
+    :func:`_phrase_tf` ``> 0``, the same execution as the ranked
+    :func:`_ranked_positional`), cost |postings of the phrase terms| with no
     docstore touch at all.  Requires ``build_profile_index(positions=
     True)``.  NOTE the semantics differ deliberately from the default:
     ``"stored"`` is SUBSTRING match over the stored field text (matches
@@ -1368,7 +1640,6 @@ def simple_query_profile_from_index(
     from azuredatalakeindexer_spark.sources.profile_segments import (
         _alive,
         list_segments,
-        live_profile_slices,
     )
     from azuredatalakeindexer_spark.sources.staging import recover_for_query
 
@@ -1383,38 +1654,20 @@ def simple_query_profile_from_index(
     recover_for_query(spark, path)
     n_buckets, idx_fields, _idx_attrs = _read_meta(spark, path)
     flds = list(weights)
-    for fld in flds:
-        if fld not in idx_fields:
-            raise ValueError(
-                f"simple_query_profile_from_index: field {fld!r} is not "
-                f"indexed (index fields: {idx_fields})"
-            )
+    _check_fields("simple_query_profile_from_index", flds, idx_fields)
+    segs = list_segments(spark, path)
+
+    def live_rows(terms):
+        # the weighted fields' live postings rows of ``terms``
+        return _live_rows(
+            spark, path, segs, n_buckets=n_buckets, terms=sorted(set(terms)),
+            cond=F.col("field").isin(flds), fields=flds, id_col=id_col,
+        )
+
     allowed = None
     filter_terms = sorted(set(required) | set(excluded))
     if filter_terms:
-        fbuckets = sorted({_py_bucket(t, n_buckets) for t in filter_terms})
-        fcond = F.col("field").isin(flds) & F.col("term").isin(filter_terms)
-        segs = list_segments(spark, path)
-        if segs:
-            fslice, _dls, _vals = live_profile_slices(
-                spark,
-                path,
-                segs,
-                id_col=id_col,
-                buckets=fbuckets,
-                all_terms=filter_terms,
-                cond=fcond,
-                need_attrs=[],
-                fields=flds,
-            )
-        else:
-            fslice = (
-                spark.read.parquet(f"{path}/postings")
-                .where(F.col("bucket").isin(fbuckets))
-                .where(F.col("term").isin(filter_terms))
-                .where(F.col("field").isin(flds))
-                .select("term", id_col)
-            )
+        fslice = live_rows(filter_terms).select("term", id_col)
         for t in sorted(set(required)):
             ti = fslice.where(F.col("term") == t).select(id_col)
             allowed = ti if allowed is None else allowed.join(ti, id_col, "left_semi")
@@ -1442,75 +1695,25 @@ def simple_query_profile_from_index(
         # Lucene-PhraseQuery serving (r13 — the r12 weak's "(c)" path):
         # each phrase's whitespace tokens must appear ADJACENT in >=1
         # weighted field, answered entirely from the positional postings
-        # (|∩_i (P_i − i)| > 0 per (doc, field)) — bucket-pruned,
+        # (_phrase_tf > 0 per (doc, field)) — bucket-pruned,
         # term-pushed, |postings of the phrase terms| per query, the
         # docstore never read
-        pos_postings = spark.read.parquet(f"{path}/postings")
-        if "pos" not in pos_postings.columns:
+        if "pos" not in spark.read.parquet(f"{path}/postings").columns:
             raise ValueError(
                 "simple_query_profile_from_index(phrase_mode='positions') "
                 f"needs a POSITIONAL profile index at {path}: rebuild "
                 "with build_profile_index(..., positions=True)"
-            )
-        pos_segs = list_segments(spark, path)
-
-        def _pos_slice(terms: list) -> DataFrame:
-            """Live (id, field, term, pos) rows of ``terms`` restricted to
-            the weighted fields — doc-level LWW across LSM segments when
-            any are pending (r13), the plain pruned read otherwise."""
-            uniq = sorted(set(terms))
-            pb = sorted({_py_bucket(t, n_buckets) for t in uniq})
-            tc = F.col("field").isin(flds) & F.col("term").isin(uniq)
-            if pos_segs:
-                sl, _dls, _vals = live_profile_slices(
-                    spark,
-                    path,
-                    pos_segs,
-                    id_col=id_col,
-                    buckets=pb,
-                    all_terms=uniq,
-                    cond=tc,
-                    need_attrs=[],
-                    fields=flds,
-                )
-                return sl.select(id_col, "field", "term", "pos")
-            return (
-                pos_postings.where(F.col("bucket").isin(pb))
-                .where(F.col("term").isin(uniq))
-                .where(F.col("field").isin(flds))
-                .select(id_col, "field", "term", "pos")
             )
 
         def _phrase_ids(p: str) -> DataFrame:
             terms = [t for t in p.split() if t]
             if not terms:
                 raise ValueError("empty phrase in simple query")
-            sl = _pos_slice(terms)
-            g = sl.groupBy(id_col, "field").agg(
-                *[
-                    F.first(
-                        F.when(F.col("term") == t, F.col("pos")),
-                        ignorenulls=True,
-                    ).alias(f"_p{i}")
-                    for i, t in enumerate(terms)
-                ]
-            )
-
-            # single-arg lambda: F.transform treats a 2-arg lambda as
-            # (element, index) — same pitfall note as query_phrase_index
-            def _shift(off: int):
-                return lambda x: x - off
-
-            starts = F.col("_p0")
-            for i in range(1, len(terms)):
-                starts = F.array_intersect(
-                    starts, F.transform(F.col(f"_p{i}"), _shift(i))
-                )
-            ok = F.lit(True)
-            for i in range(len(terms)):
-                ok = ok & F.col(f"_p{i}").isNotNull()
             return (
-                g.where(ok & (F.size(starts) > 0)).select(id_col).distinct()
+                _pivot_positions(live_rows(terms), [id_col, "field"], terms)
+                .where(_phrase_tf(len(terms)) > 0)
+                .select(id_col)
+                .distinct()
             )
 
         for p in sorted(set(req_phrases)):
@@ -1525,7 +1728,7 @@ def simple_query_profile_from_index(
             if allowed is None:
                 # every returnable doc matches >=1 positive term — start
                 # from that index-sized candidate set, never the corpus
-                allowed = _pos_slice(positives).select(id_col).distinct()
+                allowed = live_rows(positives).select(id_col).distinct()
             allowed = allowed.join(ids_p, id_col, "left_anti")
     elif req_phrases or exc_phrases:
         from azuredatalakeindexer_spark.sources.ann_index import (
@@ -1539,7 +1742,6 @@ def simple_query_profile_from_index(
                 "stored text; build with "
                 "build_profile_index(store_fields=True)"
             )
-        psegs = list_segments(spark, path)
         # --- candidate restriction (r13 — closes the r12 `weak`) --------
         # The final page can only contain docs matching >=1 positive term
         # in >=1 weighted field (query_profile_index ranks nothing else),
@@ -1557,28 +1759,6 @@ def simple_query_profile_from_index(
             allowed = allowed.localCheckpoint()
             cands = allowed
         else:
-            pbuckets = sorted({_py_bucket(t, n_buckets) for t in positives})
-            pc = F.col("field").isin(flds) & F.col("term").isin(positives)
-            if psegs:
-                pslice, _pdls, _pvals = live_profile_slices(
-                    spark,
-                    path,
-                    psegs,
-                    id_col=id_col,
-                    buckets=pbuckets,
-                    all_terms=positives,
-                    cond=pc,
-                    need_attrs=[],
-                    fields=flds,
-                )
-            else:
-                pslice = (
-                    spark.read.parquet(f"{path}/postings")
-                    .where(F.col("bucket").isin(pbuckets))
-                    .where(F.col("term").isin(positives))
-                    .where(F.col("field").isin(flds))
-                    .select(id_col)
-                )
             # the candidate set stays a LAZY expression: the old shape
             # (checkpoint, then a second job collecting the dbuckets)
             # spent two serial fixed job latencies before the serve's one
@@ -1587,7 +1767,7 @@ def simple_query_profile_from_index(
             # re-derived per phrase consumer INSIDE the final job — is
             # candidate-sized executor work running at full parallelism
             # (A/B'd at sf0.1 and sf1, OPTIMIZATION_r15.md).
-            cands = pslice.select(id_col).distinct()
+            cands = live_rows(positives).select(id_col).distinct()
         dbs = sorted(
             r["b"]
             for r in cands.select(
@@ -1596,7 +1776,7 @@ def simple_query_profile_from_index(
             .distinct()
             .collect()
         )  # bounded: at most n_buckets distinct values — ONE job
-        if psegs:
+        if segs:
             from azuredatalakeindexer_spark.sources.profile_segments import (
                 BASE_SEG,
                 _read_or_empty,
@@ -1612,7 +1792,7 @@ def simple_query_profile_from_index(
                 )
 
             store = _sslice(spark.read.parquet(f"{path}/docstore"), BASE_SEG)
-            for s in psegs:
+            for s in segs:
                 store = store.unionByName(
                     _sslice(
                         _read_or_empty(
@@ -1679,6 +1859,201 @@ def simple_query_profile_from_index(
     )
 
 
+def _live_rows(
+    spark: SparkSession,
+    path: str,
+    segs: list,
+    *,
+    n_buckets: int,
+    terms: list,
+    cond,
+    fields: list,
+    id_col: str,
+) -> DataFrame:
+    """LIVE postings rows of ``terms`` satisfying ``cond`` — the terms'
+    bucket IN-list statically prunes directories and the term IN-list
+    pushes into the term-sorted files; with LSM segments pending,
+    doc-level last-writer-wins resolves over the candidate docs
+    (:func:`profile_segments.live_profile_slices`)."""
+    buckets = sorted({_py_bucket(t, n_buckets) for t in terms})
+    if segs:
+        from azuredatalakeindexer_spark.sources.profile_segments import (
+            live_profile_slices,
+        )
+
+        rows, _dls, _vals = live_profile_slices(
+            spark, path, segs, id_col=id_col, buckets=buckets, all_terms=terms,
+            cond=cond, need_attrs=[], fields=fields,
+        )
+        return rows
+    return (
+        spark.read.parquet(f"{path}/postings")
+        .where(F.col("bucket").isin(buckets))
+        .where(F.col("term").isin(terms))
+        .where(cond)
+    )
+
+
+def _pivot_positions(rows: DataFrame, keys, terms) -> DataFrame:
+    """Pivot ``(keys..., term, pos)`` positional rows to one row per key
+    with ``_p{i}`` = the i-th query token's sorted position list (NULL
+    when the token is absent) — the input shape of :func:`_phrase_tf` /
+    :func:`_near_tf`."""
+    return rows.groupBy(*keys).agg(
+        *[
+            F.first(F.when(F.col("term") == t, F.col("pos")), ignorenulls=True).alias(
+                f"_p{i}"
+            )
+            for i, t in enumerate(terms)
+        ]
+    )
+
+
+def _phrase_tf(n: int):
+    """Exact-phrase occurrence count over ``_p0.._p{n-1}``: ``|∩_i (P_i −
+    i)|`` — identical to counting slice-equality starts (Lucene
+    PhraseQuery); 0 when any token is missing."""
+    # NB the shift lambda must be SINGLE-arg: F.transform treats a 2-arg
+    # lambda as (element, index) and would bind the array index over a
+    # default-arg offset (the F.filter-arity pitfall)
+    def _shift(off: int):
+        return lambda x: x - off
+
+    starts = F.col("_p0")
+    for i in range(1, n):
+        starts = F.array_intersect(starts, F.transform(F.col(f"_p{i}"), _shift(i)))
+    have_all = F.lit(True)
+    for i in range(n):
+        have_all = have_all & F.col(f"_p{i}").isNotNull()
+    return F.when(have_all, F.size(starts)).otherwise(F.lit(0))
+
+
+def _near_tf(slop: int, ordered: bool):
+    """Proximity pair count over ``_p0`` (term1) / ``_p1`` (term2) —
+    Lucene span semantics: ordered ``p1 < p2 <= p1 + slop + 1``, or
+    either-direction ``0 < |p1 - p2| <= slop + 1``; 0 when either term is
+    missing."""
+    p1s, p2s = F.col("_p0"), F.col("_p1")
+    if ordered:
+        pair_count = F.aggregate(
+            p1s,
+            F.lit(0).cast("bigint"),
+            lambda acc, p1: acc
+            + F.size(F.filter(p2s, lambda p2: (p2 > p1) & (p2 <= p1 + slop + 1))),
+        )
+    else:
+        pair_count = F.aggregate(
+            p1s,
+            F.lit(0).cast("bigint"),
+            lambda acc, p1: acc
+            + F.size(
+                F.filter(
+                    p2s,
+                    lambda p2: (p2 != p1) & (F.abs(p2 - p1) <= slop + 1),
+                )
+            ),
+        )
+    return F.when(p1s.isNotNull() & p2s.isNotNull(), pair_count).otherwise(F.lit(0))
+
+
+def _ranked_positional(
+    spark: SparkSession,
+    path: str,
+    field: str,
+    terms: list,
+    tf_expr,
+    tf_name: str,
+    *,
+    id_col: str,
+    k1: float,
+    b: float,
+    k: int,
+    op: str,
+) -> DataFrame:
+    """Ranked positional top-k over ONE field of a positional index — the
+    Lucene PhraseQuery / sloppy-phrase execution: read only the query
+    tokens' bucket partitions (static PartitionFilter + pushed ``term
+    IN`` + field equality), pivot each doc's position lists
+    (:func:`_pivot_positions`), count the virtual term's occurrences
+    with ``tf_expr`` (:func:`_phrase_tf` / :func:`_near_tf`), and rank
+    with the BM25-virtual-term formula of the scan-time ``phrase_topk`` /
+    ``near_topk`` — df is the candidate count, ``n_docs``/``avgdl`` the
+    field's driver-side fieldstats row, so results are bit-identical to
+    the scan-time operators (test-pinned).  Output ``(id, tf_name,
+    bm25)``.
+
+    Per-query cost is |postings of the query tokens|, never the corpus;
+    with LSM segments pending the positional rows ride the doc-level
+    last-writer-wins resolution (:func:`profile_segments.
+    live_profile_slices`)."""
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        list_segments,
+        live_profile_slices,
+    )
+    from azuredatalakeindexer_spark.sources.staging import recover_for_query
+
+    uniq = sorted(set(terms))
+    recover_for_query(spark, path)
+    n_buckets, idx_fields, _idx_attrs = _read_meta(spark, path)
+    _check_fields(op, [field], idx_fields)
+    base = spark.read.parquet(f"{path}/postings")
+    if "pos" not in base.columns:
+        raise ValueError(
+            f"{op} needs a POSITIONAL index: rebuild with positions=True"
+        )
+    buckets = sorted({_py_bucket(t, n_buckets) for t in uniq})
+    segs = list_segments(spark, path)
+    if segs:
+        rows, dls, _vals = live_profile_slices(
+            spark,
+            path,
+            segs,
+            id_col=id_col,
+            buckets=buckets,
+            all_terms=uniq,
+            cond=(F.col("field") == field) & F.col("term").isin(uniq),
+            need_attrs=[],
+            fields=[field],
+        )
+    else:
+        rows = (
+            base.where(F.col("bucket").isin(buckets))
+            .where(F.col("term").isin(uniq))
+            .where(F.col("field") == field)
+        )
+        dls = spark.read.parquet(f"{path}/doclens").where(F.col("field") == field)
+    cand = (
+        _pivot_positions(rows, [id_col], terms)
+        .select(F.col(id_col), tf_expr.cast("bigint").alias(tf_name))
+        .where(F.col(tf_name) > 0)
+    )
+    n_docs, avgdl = next(
+        (
+            (int(r["n_docs"]), float(r["avgdl"]))
+            for r in _fieldstats_rows(spark, path)
+            if r["field"] == field
+        ),
+        (0, 0.0),
+    )
+    dfr = cand.agg(F.count(F.lit(1)).alias("_df"))
+    scored = cand.join(dls.select(id_col, "dl"), id_col).crossJoin(F.broadcast(dfr))
+    norm = F.lit(b) * F.col("dl") / F.lit(avgdl) if avgdl > 0 else F.lit(0.0)
+    tf = F.col(tf_name).cast("double")
+    idf = F.log(
+        F.lit(1.0)
+        + (F.lit(n_docs) - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
+    )
+    score = (idf * tf * F.lit(k1 + 1.0)) / (
+        tf + F.lit(k1) * (F.lit(1.0 - b) + norm)
+    )
+    return (
+        scored.select(F.col(id_col), tf_name, F.round(score, 6).alias("bm25"))
+        .where(F.col("bm25") > 0)
+        .orderBy(F.col("bm25").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
 def near_profile_from_index(
     spark: SparkSession,
     path: str,
@@ -1703,9 +2078,9 @@ def near_profile_from_index(
     statistics), and the proximity predicate narrows the returnable set
     to docs where ``term1`` and ``term2`` co-occur within ``slop`` in AT
     LEAST ONE of the weighted fields — the per-field rule mirroring the
-    phrase predicates, with the same Lucene span semantics as the
-    single-field ``query_near_index`` (ordered ``p1 < p2 <= p1+slop+1``,
-    unordered ``0 < |p1-p2| <= slop+1``).
+    phrase predicates, with Lucene span semantics (:func:`_near_tf`:
+    ordered ``p1 < p2 <= p1+slop+1``, unordered ``0 < |p1-p2| <= slop+1``)
+    — the filter form of the ranked ``text_index.query_near_index``.
 
     Plan shape: the proximity check reads ONLY the two terms' bucket
     partitions of the positional postings restricted to the weighted
@@ -1721,83 +2096,30 @@ def near_profile_from_index(
     from azuredatalakeindexer_spark.sources.staging import recover_for_query
 
     t1, t2 = term1.lower(), term2.lower()
-    uniq = sorted({t1, t2})
     recover_for_query(spark, path)
     n_buckets, idx_fields, _idx_attrs = _read_meta(spark, path)
     flds = list(weights)
-    for fld in flds:
-        if fld not in idx_fields:
-            raise ValueError(
-                f"near_profile_from_index: field {fld!r} is not indexed "
-                f"(index fields: {idx_fields})"
-            )
-    postings = spark.read.parquet(f"{path}/postings")
-    if "pos" not in postings.columns:
+    _check_fields("near_profile_from_index", flds, idx_fields)
+    if "pos" not in spark.read.parquet(f"{path}/postings").columns:
         raise ValueError(
             "near_profile_from_index needs a POSITIONAL profile index: "
             "rebuild with build_profile_index(..., positions=True)"
         )
-    buckets = sorted({_py_bucket(t, n_buckets) for t in uniq})
-    segs = list_segments(spark, path)
-    if segs:
-        # LSM segments pending: the positional rows ride the standard
-        # doc-level last-writer-wins resolution (live_profile_slices
-        # keeps pos, r13) so proximity sees exactly the live corpus
-        from azuredatalakeindexer_spark.sources.profile_segments import (
-            live_profile_slices,
-        )
-
-        pslice, _dls, _vals = live_profile_slices(
-            spark,
-            path,
-            segs,
-            id_col=id_col,
-            buckets=buckets,
-            all_terms=uniq,
-            cond=F.col("field").isin(flds) & F.col("term").isin(uniq),
-            need_attrs=[],
-            fields=flds,
-        )
-        pslice = pslice.select(id_col, "field", "term", "pos")
-    else:
-        pslice = (
-            postings.where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(uniq))
-            .where(F.col("field").isin(flds))
-            .select(id_col, "field", "term", "pos")
-        )
-    g = pslice.groupBy(id_col, "field").agg(
-        F.first(
-            F.when(F.col("term") == t1, F.col("pos")), ignorenulls=True
-        ).alias("_p1"),
-        F.first(
-            F.when(F.col("term") == t2, F.col("pos")), ignorenulls=True
-        ).alias("_p2"),
+    pslice = _live_rows(
+        spark, path, list_segments(spark, path), n_buckets=n_buckets,
+        terms=sorted({t1, t2}), cond=F.col("field").isin(flds), fields=flds,
+        id_col=id_col,
     )
-    p1s, p2s = F.col("_p1"), F.col("_p2")
-    if ordered:
-        near_here = F.exists(
-            p1s,
-            lambda p1: F.exists(
-                p2s, lambda p2: (p2 > p1) & (p2 <= p1 + slop + 1)
-            ),
-        )
-    else:
-        near_here = F.exists(
-            p1s,
-            lambda p1: F.exists(
-                p2s, lambda p2: (p2 != p1) & (F.abs(p2 - p1) <= slop + 1)
-            ),
-        )
     allowed = (
-        g.where(p1s.isNotNull() & p2s.isNotNull() & near_here)
+        _pivot_positions(pslice, [id_col, "field"], [t1, t2])
+        .where(_near_tf(slop, ordered) > 0)
         .select(id_col)
         .distinct()
     )
     return query_profile_index(
         spark,
         path,
-        {fld: (uniq, w) for fld, w in weights.items()},
+        {fld: (sorted({t1, t2}), w) for fld, w in weights.items()},
         id_col=id_col,
         k1=k1,
         b=b,
@@ -1809,61 +2131,115 @@ def near_profile_from_index(
     )
 
 
-def _profile_vocab_pairs(
+def _term_vocab(
     spark: SparkSession,
     path: str,
     term_pred,
     *,
     fields=None,
+    per_field: bool = True,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """LIVE ``(field, term, id_col)`` pairs of the multi-field index whose
-    field is in ``fields`` (default: every searchable field) and whose
-    term satisfies ``term_pred`` — the shared phase-1 relation behind the
-    profile surface's suggester, fuzzy and wildcard expansions (r14,
-    VERDICT r13 stretch-#7; the text surface's twin is the ``terms``
-    rollup / :func:`text_segments.live_term_slice` pair).
+    """LIVE vocabulary slice of the index: ``(field, term, df)`` per
+    scoped field (``per_field``), or ``(term, df)`` with df counting
+    distinct documents carrying the term in ANY scoped field — restricted
+    to terms satisfying ``term_pred`` (a ``Column -> Column`` factory).
+    The shared phase-1 relation behind suggest, fuzzy and wildcard
+    expansion; ``fields`` defaults to every searchable field.
 
-    - **Unsegmented index** (fresh build, in-place-maintained, or
-      post-compaction): one postings scan with the field IN-list and the
-      term predicate pushed into the term-sorted bucket files — cost is
-      |vocabulary slice under the predicate|, never corpus-sized.
-    - **Segmented (LSM) index**: the slice is recounted exactly from live
-      postings across base + segments with doc-level last-writer-wins
-      liveness (:func:`profile_segments.live_field_term_slice`).
-
-    Callers aggregate the pairs to their own df notion: the suggester
-    counts distinct docs per term ACROSS the scoped fields, the fuzzy /
-    wildcard expansions count per (field, term) — one helper, two
-    aggregations, both candidate-sized.
+    - **Unsegmented index with a rollup** (fresh build, in-place-
+      maintained, or post-compaction — the steady state): one scan of the
+      vocabulary-sized ``<path>/terms`` relation, range-partitioned and
+      sorted by (field, term), so the pushed field equality and a
+      sargable term predicate (prefix range, literal-prefix LIKE) prune
+      files and row groups — never postings-sized.  Cross-field df cannot
+      be summed from per-field rows, so a multi-field ``per_field=False``
+      slice takes the postings path below.
+    - **Otherwise** df is recounted exactly from LIVE postings with the
+      field IN-list and the predicate pushed into the term-sorted bucket
+      files; with LSM segments pending, doc-level last-writer-wins
+      liveness resolves over the candidate docs only
+      (:func:`profile_segments.live_field_term_slice`).
     """
+    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        list_segments,
+        live_field_term_slice,
+    )
     from azuredatalakeindexer_spark.sources.staging import recover_for_query
 
     recover_for_query(spark, path)
     _n_buckets, idx_fields, _idx_attrs = _read_meta(spark, path)
     flds = list(fields) if fields else list(idx_fields)
-    for fld in flds:
-        if fld not in idx_fields:
-            raise ValueError(
-                f"_profile_vocab_pairs: field {fld!r} is not indexed "
-                f"(index fields: {idx_fields})"
-            )
-    from azuredatalakeindexer_spark.sources.profile_segments import (
-        list_segments,
-        live_field_term_slice,
-    )
-
+    _check_fields("_term_vocab", flds, idx_fields)
     segs = list_segments(spark, path)
+    if (
+        not segs
+        and (per_field or len(flds) == 1)
+        and hadoop_path_exists(spark, f"{path}/terms")
+    ):
+        rollup = (
+            spark.read.parquet(f"{path}/terms")
+            .where(F.col("field").isin(flds))
+            .where(term_pred(F.col("term")))
+        )
+        return rollup if per_field else rollup.select("term", "df")
     if segs:
-        return live_field_term_slice(
+        pairs = live_field_term_slice(
             spark, path, segs, term_pred, fields=flds, id_col=id_col
         )
-    return (
-        spark.read.parquet(f"{path}/postings")
-        .where(F.col("field").isin(flds))
-        .where(term_pred(F.col("term")))
-        .select("field", "term", id_col)
-    )
+    else:
+        pairs = (
+            spark.read.parquet(f"{path}/postings")
+            .where(F.col("field").isin(flds))
+            .where(term_pred(F.col("term")))
+            .select("field", "term", id_col)
+        )
+    keys = ["field", "term"] if per_field else ["term"]
+    return pairs.groupBy(*keys).agg(F.countDistinct(id_col).alias("df"))
+
+
+def _fuzzy_band(query_terms, max_edits: int, prefix_len: int):
+    """``Column -> Column`` predicate: the term is within the length band
+    of some query term (``| |t| - |q| | <= max_edits`` is necessary for
+    edit distance) and shares its first ``prefix_len`` characters — the
+    sargable guard pushed into the vocabulary scan before levenshtein."""
+    qts = [t.lower() for t in query_terms]
+    if not qts:
+        raise ValueError("fuzzy expansion needs at least one query term")
+
+    def band(term):
+        conds = None
+        for q in qts:
+            c = (F.length(term) >= len(q) - max_edits) & (
+                F.length(term) <= len(q) + max_edits
+            )
+            if prefix_len > 0:
+                c = c & term.startswith(q[:prefix_len])
+            conds = c if conds is None else (conds | c)
+        return conds
+
+    return band
+
+
+def _pattern_match(patterns):
+    """``Column -> Column`` predicate: the term matches ANY of the Lucene
+    wildcard ``patterns`` (a literal-prefix pattern plans as a pushable
+    StartsWith)."""
+    from azuredatalakeindexer_spark.operators.search import wildcard_like
+
+    likes = [wildcard_like(p) for p in patterns]
+    if not likes:
+        raise ValueError("wildcard expansion needs at least one pattern")
+
+    def match(term):
+        conds = None
+        for lk in likes:
+            c = term.like(lk)
+            conds = c if conds is None else (conds | c)
+        return conds
+
+    return match
 
 
 def suggest_profile_from_index(
@@ -1875,29 +2251,29 @@ def suggest_profile_from_index(
     k: int = 10,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Autocomplete suggestions served FROM the persisted multi-field
-    index (r14 — the profile twin of ``text_index.suggest_from_index``,
-    the reference service's field-scoped suggesters: a suggester names
-    the ``sourceFields`` it draws from): ``(term, df)`` ranked df desc /
-    term asc, where df counts distinct documents whose LIVE version
-    carries the term in ANY of the scoped fields.  Cost is |vocabulary
-    slice under the prefix| — the pushed ``startswith`` prunes the
-    term-sorted bucket files — independent of corpus size, and the
-    segmented (LSM) state recounts df exactly instead of serving stale
-    numbers."""
+    """Autocomplete suggestions served FROM the persisted index (the
+    reference service's field-scoped suggesters: a suggester names the
+    ``sourceFields`` it draws from): ``(term, df)`` ranked df desc / term
+    asc, where df counts distinct documents whose LIVE version carries
+    the term in ANY of the scoped fields — the output contract of the
+    scan-time ``operators.search.suggest_terms``.  A single-field scope
+    on an unsegmented index reads only the term-sorted ``terms`` rollup
+    (cost |vocabulary slice under the prefix|, independent of corpus
+    size); a multi-field scope pushes the prefix into the term-sorted
+    postings files, and the segmented (LSM) state recounts df exactly
+    instead of serving stale numbers (:func:`_term_vocab`)."""
     if not prefix:
         raise ValueError("suggest_profile_from_index needs a non-empty prefix")
     needle = prefix.lower()
-    pairs = _profile_vocab_pairs(
-        spark,
-        path,
-        lambda t: t.startswith(needle),
-        fields=fields,
-        id_col=id_col,
-    )
     return (
-        pairs.groupBy("term")
-        .agg(F.countDistinct(id_col).alias("df"))
+        _term_vocab(
+            spark,
+            path,
+            lambda t: t.startswith(needle),
+            fields=fields,
+            per_field=False,
+            id_col=id_col,
+        )
         .orderBy(F.col("df").desc(), F.col("term"))
         .limit(k)
     )
@@ -1920,15 +2296,12 @@ def _expand_profile_terms(
     and keep each field's ``max_expansions`` best candidates by the SAME
     ordering as ``operators.search.rank_fuzzy_expansions`` (dist asc, df
     desc, term asc — Lucene caps its per-field rewrites identically).  One
-    candidate-sized aggregate + one model-sized collect for ALL fields:
+    vocabulary-sized read + one model-sized collect for ALL fields:
     at most ``max_expansions x |fields|`` rows of planner traffic."""
     from pyspark.sql import Window
 
-    pairs = _profile_vocab_pairs(
+    vocab = _term_vocab(
         spark, path, term_pred, fields=list(field_weights), id_col=id_col
-    )
-    vocab = pairs.groupBy("field", "term").agg(
-        F.countDistinct(id_col).alias("df")
     )
     cands = vocab.withColumn("dist", dist_col).where(
         F.col("dist") <= F.lit(max_edits)
@@ -1950,8 +2323,7 @@ def _expand_profile_terms(
 
 def _empty_scored(spark: SparkSession, path: str, id_col: str) -> DataFrame:
     """0-row ``(id_col, score)`` frame typed off the index's doclens —
-    the no-expansion result shape shared by fuzzy / wildcard profile
-    search (same contract as ``query_fuzzy_index``'s empty branch)."""
+    the no-expansion result shape shared by fuzzy / wildcard search."""
     return (
         spark.read.parquet(f"{path}/doclens")
         .select(F.col(id_col))
@@ -1993,18 +2365,10 @@ def fuzzy_profile_from_index(
     q = term.lower()
     if not q:
         raise ValueError("fuzzy_profile_from_index needs a non-empty term")
-    tlen = F.length(F.col("term"))
-
-    def band(t):
-        c = (tlen >= len(q) - max_edits) & (tlen <= len(q) + max_edits)
-        if prefix_len > 0:
-            c = c & t.startswith(q[:prefix_len])
-        return c
-
     expanded = _expand_profile_terms(
         spark,
         path,
-        band,
+        _fuzzy_band([q], max_edits, prefix_len),
         F.levenshtein(F.col("term"), F.lit(q)).cast("long"),
         field_weights,
         max_edits=max_edits,
@@ -2052,13 +2416,10 @@ def wildcard_profile_from_index(
     per-field top-``max_expansions`` by df desc / term asc (dist is a
     constant 0 — the shared ranking with the fuzzy path); phase 2 scores
     the per-field expansions through ``query_profile_index``."""
-    from azuredatalakeindexer_spark.operators.search import wildcard_like
-
-    lk = wildcard_like(pattern)
     expanded = _expand_profile_terms(
         spark,
         path,
-        lambda t: t.like(lk),
+        _pattern_match([pattern]),
         F.lit(0).cast("long"),
         field_weights,
         max_edits=0,
@@ -2111,7 +2472,8 @@ def highlight_profile_from_index(
     containing the term return ``hit_pos=0`` and a NULL snippet.
 
     Output ``(id_col, score, hit_pos, snippet)`` ordered score-desc,
-    id-asc — identical shape to ``text_index.highlight_from_index``.
+    id-asc (``text_index.highlight_from_index`` is this on a one-field
+    index).
 
     Scale shape: the candidate fetch is candidate-sized, never
     corpus-sized — the k result-page ids are collected (model-sized by
@@ -2131,11 +2493,7 @@ def highlight_profile_from_index(
         )
     n_buckets, idx_fields, _attrs = _read_meta(spark, path)
     fld = highlight_field if highlight_field is not None else list(profile)[0]
-    if fld not in idx_fields:
-        raise ValueError(
-            f"highlight_profile_from_index: field {fld!r} is not indexed "
-            f"(index fields: {idx_fields})"
-        )
+    _check_fields("highlight_profile_from_index", [fld], idx_fields)
     needle = (
         highlight_term
         if highlight_term is not None
@@ -2172,49 +2530,37 @@ def highlight_profile_from_index(
     )
     ids = [r[id_col] for r in rows]
     from azuredatalakeindexer_spark.sources.profile_segments import (
-        BASE_SEG,
-        _read_or_empty,
-        _seg_dir,
+        _with_segments,
         list_segments,
     )
+
+    def _page(df: DataFrame) -> DataFrame:
+        return (
+            df.where(F.col("dbucket").isin(dbs))
+            .where(F.col(id_col).isin(ids))
+            .where(F.col("field") == fld)
+        )
 
     segs = list_segments(spark, path)
     if segs:
         # candidate-restricted slices of base + every segment's docstore,
         # resolved per (id, field) by the max-segment rule
-        def _slice(df: DataFrame, seg: int) -> DataFrame:
-            return (
-                df.where(F.col("dbucket").isin(dbs))
-                .where(F.col(id_col).isin(ids))
-                .where(F.col("field") == fld)
-                .select(id_col, "text")
-                .withColumn("seg", F.lit(seg))
+        fetched = (
+            _with_segments(
+                spark,
+                path,
+                segs,
+                "docstore",
+                f"{id_col} long, field string, text string, dbucket int",
+                [id_col, "text"],
+                where=_page,
+                prune={"dbucket": dbs},
             )
-
-        alls = _slice(spark.read.parquet(f"{path}/docstore"), BASE_SEG)
-        for s in segs:
-            alls = alls.unionByName(
-                _slice(
-                    _read_or_empty(
-                        spark,
-                        f"{_seg_dir(path, s)}/docstore",
-                        f"{id_col} long, field string, text string, "
-                        "dbucket int",
-                    ),
-                    s,
-                )
-            )
-        fetched = alls.groupBy(id_col).agg(
-            F.max_by("text", "seg").alias("text")
+            .groupBy(id_col)
+            .agg(F.max_by("text", "seg").alias("text"))
         )
     else:
-        fetched = (
-            spark.read.parquet(f"{path}/docstore")
-            .where(F.col("dbucket").isin(dbs))
-            .where(F.col(id_col).isin(ids))
-            .where(F.col("field") == fld)
-            .select(id_col, "text")
-        )
+        fetched = _page(spark.read.parquet(f"{path}/docstore")).select(id_col, "text")
     pos = F.instr(F.lower(F.col("text")), needle)
     start = F.greatest(F.lit(1), pos - F.lit(radius))
     snippet = F.substring(F.col("text"), start, F.lit(2 * radius + len(needle)))

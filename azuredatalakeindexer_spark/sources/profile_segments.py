@@ -1,57 +1,209 @@
-"""Segmented (LSM) maintenance for the multi-field profile index —
-the scale ingest path (r10, closes VERDICT r9 missing-#1's second half:
-"the profile index has only in-place maintenance").
+"""Segmented (LSM) maintenance for the multi-field index — the scale
+ingest path.
 
-The reference's architecture is a continuous watch-lake → upsert-index
-loop (`DatalakePathIndexerFunc/PathIndexerFunc.cs:18-36`); at 100 TB the
-in-place profile upserts' affected-bucket rewrites grow with index size
-(the same crossover `BENCH_sf10_r07.json` measured for the single-field
-text index), so the multi-field index gets the same LSM tier the text
-index has (`sources/text_segments.py`):
+WHY A SECOND MAINTENANCE PATH.  The in-place upsert rewrites every
+postings bucket touched by the batch.  A text batch's DISTINCT TERMS
+cover ~every term bucket of a Zipf-ish corpus (500 docs x ~40 words hit
+all 64 — or all 4096 — buckets), so "affected buckets" degenerates to the
+whole index: the true-sf1 bench measured the 1% in-place text upsert at
+5.41 s vs a 3.28 s full rebuild (`BENCH_sf1_r07.json`).  No bucket count
+fixes that; it is structural to term-partitioned in-place rewrites.  The
+scalable design — the one Lucene/Elasticsearch actually use — is
+segments, and the reference's continuous watch-lake → upsert-index loop
+(`DatalakePathIndexerFunc/PathIndexerFunc.cs:18-36`) is exactly that
+workload:
 
 - `upsert_profile_index_segmented` — the batch lands as an immutable
-  O(batch) segment ``segments/seg=K/{postings,doclens,docvals}``;
-- `delete_from_profile_index_segmented` — a tombstone-only segment;
+  O(batch) segment ``segments/seg=K/{postings,doclens,docvals,docstore}``
+  (same inner layout as the base, which acts as segment 0);
+- `delete_from_profile_index_segmented` — a tombstone-only segment
+  ``segments/seg=K/tombstones``;
 - `compact_profile_index` — folds every segment back into the base
   (content-identical to a fresh ``build_profile_index`` of the logical
-  corpus, test-pinned);
+  corpus, test-pinned), terms rollup included;
 - query-side liveness is resolved per DOCUMENT (an upsert replaces a
-  doc's EVERY field, so the max-segment rule is doc-level): the winning
-  doclens segment selects that segment's postings/doclens/docvals rows —
-  `query_profile_index` / `facets_from_index` auto-detect segments.
+  doc's EVERY field, so the max-segment rule is doc-level): a document's
+  authoritative rows are those of its highest doclens segment, alive iff
+  that id exceeds the doc's highest tombstone segment (re-adding a
+  deleted doc works because the new row outranks the old tombstone).
+  Resolution is one map-side-combinable max aggregate over candidate
+  doclens rows — no window shuffle — and postings join the alive set on
+  ``(doc_id, seg)`` so stale postings drop out without ever being
+  rewritten.  Every serve entry point auto-detects segments.
 
 ``fieldstats`` stays EXACT through every op (per-field n_docs/sum_dl
-advanced by the batch's created/replaced deltas — the same exact-bigint
-discipline as the text index's running stats), so profile scores remain
+advanced by the batch's created/replaced deltas — exact bigints, avgdl =
+sum/n is the same division ``avg`` performs), so scores remain
 bit-identical to a fresh build of the logical corpus at every point.
-Segment directories share the text tier's naming, journaled staging, and
-lease discipline (`sources/staging.py`).
+The ``terms`` rollup is stale while segments are pending, so vocabulary
+serves recount df from live postings until compaction.  Segment writes
+stage and promote under the journaled commit and lease discipline of
+`sources/staging.py`.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from azuredatalakeindexer_spark.functions.localrel import tiny_df
-from azuredatalakeindexer_spark.sources.text_segments import (
-    BASE_SEG,
-    _read_or_empty,
-    _seg_dir,
-    _seg_union,
-    list_segments,
+from azuredatalakeindexer_spark.sources.ann_index import (
+    _hadoop_fs,
+    hadoop_path_exists,
 )
 
+#: base layout acts as this segment id; real segments start at 1
+BASE_SEG = 0
 
-def _read_or_empty_like(spark: SparkSession, p: str, like: DataFrame) -> DataFrame:
-    """Read a maybe-absent segment relation typed EXACTLY like the base
-    relation (attribute columns carry arbitrary user types — a guessed
-    string schema would break the union)."""
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
 
+def list_segments(spark: SparkSession, path: str) -> list[int]:
+    """Sorted ids of the extra segments under ``<path>/segments`` (the base
+    layout is segment 0 and is not listed).  One FS list call."""
+    seg_root = f"{path}/segments"
+    fs, hroot = _hadoop_fs(spark, seg_root)
+    if not fs.exists(hroot):
+        return []
+    out = []
+    for st in fs.listStatus(hroot):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("seg="):
+            out.append(int(name[4:]))
+    return sorted(out)
+
+
+def _seg_dir(path: str, seg: int) -> str:
+    return f"{path}/segments/seg={seg}"
+
+
+def _read_or_empty(spark: SparkSession, p: str, schema: str) -> DataFrame:
+    """Read a maybe-absent parquet relation (tombstones / postings of a
+    delete-only segment) as a typed frame."""
     if hadoop_path_exists(spark, p):
         return spark.read.parquet(p)
-    return spark.createDataFrame([], like.schema)
+    return spark.createDataFrame([], schema)
+
+
+def _seg_union(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    rel: str,
+    schema,
+    prune: dict[str, list] | None = None,
+):
+    """Every segment's ``rel`` relation in ONE multi-path parquet read,
+    with segment provenance recovered from the path (``seg=K`` is already
+    a directory component of the layout, so this is a pure read-side
+    change — no format migration).  Replaces the one-DataFrame-per-segment
+    union loops whose per-segment plan/listing fixed cost was the LSM
+    read-tax (r10 verdict wrong-#3: ~0.9 s of per-QUERY overhead per
+    segment on the profile surface): with a single relation the slope is
+    one driver-side ``listStatus`` per segment plus one scan node, and
+    every downstream filter (term pushdown, dbucket) prunes across ALL
+    segments in one plan.
+
+    Missing per-segment relations (tombstones of an upsert-only segment,
+    docvals/docstore of a delete) are skipped by one driver-side existence
+    probe each.  ``schema`` (DDL string or StructType) is the FILE schema
+    including partition columns — passed explicitly so no footer
+    inference runs; the returned frame adds ``seg int``.
+
+    ``prune`` maps a path-partition column (``bucket``/``dbucket``) to the
+    wanted value list; the segment's partition directories are then pruned
+    STATICALLY at path-selection time (the driver lists each segment's
+    ``col=v`` children once and only the wanted directories enter the
+    scan's file index), preserving the "|segments| pruned scans, never
+    |segments| full scans" guarantee the unsegmented reads have via
+    PartitionFilters.
+
+    Why not one read with real partition discovery: the ``seg=K``
+    directory component ABOVE each relation dir makes Spark infer
+    conflicting partition roots across the multi-path read
+    (CONFLICTING_DIRECTORY_STRUCTURES).  With recursiveFileLookup the
+    discovery is off, so the relations' own partition columns (postings
+    are written ``partitionBy("bucket")``, doclens/docvals/docstore
+    ``partitionBy("dbucket")``) are recovered from the file path exactly
+    like ``seg`` — a regexp over the hidden ``_metadata.file_path``
+    column, NOT ``input_file_name()``: the latter is classified
+    non-deterministic, which blocks every downstream data filter (the
+    term IN-list above all) from being pushed through the projection to
+    the parquet reader; ``_metadata`` is a real deterministic column, so
+    ``PushedFilters`` stay intact."""
+    full = spark.createDataFrame([], schema).schema
+    part_names = {f.name for f in full.fields if f.name in ("bucket", "dbucket")}
+    prune = {k: {str(v) for v in vs} for k, vs in (prune or {}).items()}
+
+    paths = []
+    for s in segs:
+        p = f"{_seg_dir(path, s)}/{rel}"
+        fs, hpath = _hadoop_fs(spark, p)
+        if not fs.exists(hpath):
+            continue
+        pruned_here = False
+        for col, wanted in prune.items():
+            if col not in part_names:
+                continue
+            # one listStatus per segment: keep only the wanted col=v dirs
+            for st in fs.listStatus(hpath):
+                name = st.getPath().getName()
+                if (
+                    st.isDirectory()
+                    and name.startswith(f"{col}=")
+                    and name[len(col) + 1 :] in wanted
+                ):
+                    paths.append(f"{p}/{name}")
+            pruned_here = True
+            break
+        if not pruned_here:
+            paths.append(p)
+    if not paths:
+        empty = spark.createDataFrame([], schema)
+        return empty.withColumn("seg", F.lit(None).cast("int"))
+
+    part_fields = [f for f in full.fields if f.name in part_names]
+    file_schema = StructType([f for f in full.fields if f.name not in part_names])
+    out = (
+        spark.read.schema(file_schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(*paths)
+    )
+    fpath = F.col("_metadata.file_path")
+    for f in part_fields:
+        out = out.withColumn(
+            f.name,
+            F.regexp_extract(fpath, f"/{f.name}=([^/]+)/", 1).cast(f.dataType),
+        )
+    out = out.withColumn(
+        "seg", F.regexp_extract(fpath, "/seg=([0-9]+)/", 1).cast("int")
+    )
+    return out.select(*[f.name for f in full.fields], "seg")
+
+
+def _with_segments(
+    spark: SparkSession,
+    path: str,
+    segs: list[int],
+    rel: str,
+    schema,
+    cols: list[str],
+    *,
+    where=None,
+    prune: dict[str, list] | None = None,
+) -> DataFrame:
+    """``cols`` + ``seg`` of the base ``rel`` (segment 0) unioned with every
+    segment's ``rel`` in one multi-path read (:func:`_seg_union`).
+    ``where`` (a ``DataFrame -> DataFrame`` slice) applies to both sides
+    so its predicates push into every scan; ``prune`` statically prunes
+    the segments' partition directories."""
+
+    def sl(df: DataFrame) -> DataFrame:
+        return (where(df) if where is not None else df).select(*cols, "seg")
+
+    base = spark.read.parquet(f"{path}/{rel}").withColumn("seg", F.lit(BASE_SEG))
+    return sl(base).unionByName(
+        sl(_seg_union(spark, path, segs, rel, schema, prune=prune))
+    )
+
 
 __all__ = [
     "upsert_profile_index_segmented",
@@ -72,19 +224,16 @@ def _all_plens(
 ) -> DataFrame:
     """Union of every segment's (id, field, dl) doclens rows with segment
     provenance; ``dbuckets`` statically prunes each slice."""
-    base = spark.read.parquet(f"{path}/doclens")
-    segp = _seg_union(
-        spark, path, segs, "doclens",
+    pruned = dbuckets is not None
+    return _with_segments(
+        spark,
+        path,
+        segs,
+        "doclens",
         f"{id_col} long, field string, dl int, dbucket int",
-        prune={"dbucket": dbuckets} if dbuckets is not None else None,
-    )
-    if dbuckets is not None:
-        base = base.where(F.col("dbucket").isin(dbuckets))
-        segp = segp.where(F.col("dbucket").isin(dbuckets))
-    return (
-        base.select(id_col, "field", "dl")
-        .withColumn("seg", F.lit(BASE_SEG))
-        .unionByName(segp.select(id_col, "field", "dl", "seg"))
+        [id_col, "field", "dl"],
+        where=(lambda df: df.where(F.col("dbucket").isin(dbuckets))) if pruned else None,
+        prune={"dbucket": dbuckets} if pruned else None,
     )
 
 
@@ -139,86 +288,53 @@ def live_profile_slices(
     term match).  Every slice is bucket/dbucket-pruned and term-pushed
     exactly like the unsegmented reads; liveness is one doc-level max
     aggregate over the candidates' doclens rows."""
-    base_postings = spark.read.parquet(f"{path}/postings")
     # positional profile indexes (r13) keep their pos lists through the
-    # liveness resolution — same contract as the text surface's
-    # live_postings — so NEAR / positional phrase serve across segments
-    has_pos = "pos" in base_postings.columns
+    # liveness resolution, so phrase / NEAR serve across segments
+    has_pos = "pos" in spark.read.parquet(f"{path}/postings").columns
     mcols = [id_col, "field", "term", "tf"] + (["pos"] if has_pos else [])
-
-    def mslice(df: DataFrame) -> DataFrame:
-        return (
-            df.where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(all_terms))
-            .where(cond)
-            .select(*mcols, "seg")
-        )
-
-    seg_schema = (
-        f"term string, {id_col} long, field string, tf bigint"
-        + (", pos array<int>" if has_pos else "")
-        + ", bucket bigint"
-    )
-    allm = (
-        mslice(base_postings.withColumn("seg", F.lit(BASE_SEG)))
-        .unionByName(
-            mslice(
-                _seg_union(
-                    spark,
-                    path,
-                    segs,
-                    "postings",
-                    seg_schema,
-                    prune={"bucket": buckets},
-                )
-            )
-        )
-        .localCheckpoint()
-    )
-
-    cand = allm.select(id_col).distinct()
-    # ONE doclens relation feeds both the liveness aggregate and the dl
-    # lookup (it used to be assembled twice — half the r10 per-segment
-    # read-tax on this path)
-    plens = _all_plens(spark, path, segs, id_col)
-    latest = (
-        plens.join(cand, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("seg"))
-    )
-    tombs = (
-        _all_tombs(spark, path, segs, id_col)
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("_tseg"))
-    )
-    alive = (
-        latest.join(tombs, id_col, "left")
-        .where(F.col("seg") > F.coalesce(F.col("_tseg"), F.lit(-1)))
-        .select(id_col, "seg")
-        .localCheckpoint()
-    )
+    allm = _with_segments(
+        spark,
+        path,
+        segs,
+        "postings",
+        _postings_schema(id_col, has_pos),
+        mcols,
+        where=lambda df: df.where(F.col("bucket").isin(buckets))
+        .where(F.col("term").isin(all_terms))
+        .where(cond),
+        prune={"bucket": buckets},
+    ).localCheckpoint()
+    alive = _alive(
+        spark, path, segs, id_col, candidates=allm.select(id_col).distinct()
+    ).localCheckpoint()
     matches = allm.join(alive, [id_col, "seg"]).select(*mcols)
-
     dls = (
-        plens.where(F.col("field").isin(fields))
+        _all_plens(spark, path, segs, id_col)
+        .where(F.col("field").isin(fields))
         .join(alive, [id_col, "seg"])
         .select(id_col, "field", "dl")
     )
 
     vals = None
     if need_attrs:
-        base_vals = spark.read.parquet(f"{path}/docvals")
-        allv = (
-            base_vals.select(id_col, *need_attrs)
-            .withColumn("seg", F.lit(BASE_SEG))
-            .unionByName(
-                _seg_union(spark, path, segs, "docvals", base_vals.schema).select(
-                    id_col, *need_attrs, "seg"
-                )
-            )
+        allv = _with_segments(
+            spark,
+            path,
+            segs,
+            "docvals",
+            spark.read.parquet(f"{path}/docvals").schema,
+            [id_col, *need_attrs],
         )
         vals = allv.join(alive, [id_col, "seg"]).select(id_col, *need_attrs)
     return matches, dls, vals
+
+
+def _postings_schema(id_col: str, has_pos: bool) -> str:
+    return (
+        f"term string, {id_col} long, field string, tf bigint"
+        + (", pos array<int>" if has_pos else "")
+        + ", bucket bigint"
+    )
 
 
 def live_field_term_slice(
@@ -232,10 +348,8 @@ def live_field_term_slice(
 ) -> DataFrame:
     """``(field, term, id_col)`` rows of LIVE postings whose field is in
     ``fields`` and whose term satisfies ``term_pred`` (a ``Column ->
-    Column`` factory) — the multi-field twin of
-    :func:`text_segments.live_term_slice`, and the segmented-state
-    vocabulary slice behind the profile surface's suggester, fuzzy and
-    wildcard expansions (r14, VERDICT r13 stretch-#7).
+    Column`` factory) — the segmented-state vocabulary slice behind
+    suggest, fuzzy and wildcard expansion (``profile_index._term_vocab``).
 
     The field IN-list and the term predicate are applied INSIDE every
     slice scan (base + each segment) so sargable conjuncts (prefix
@@ -244,63 +358,30 @@ def live_field_term_slice(
     resolves only over docs that carry a matching term in a scoped field
     (candidate-sized, not corpus-sized), the same max-segment rule as
     :func:`live_profile_slices`."""
-    base_postings = spark.read.parquet(f"{path}/postings")
-    has_pos = "pos" in base_postings.columns
-
-    def slice_(df: DataFrame) -> DataFrame:
-        return (
-            df.where(F.col("field").isin(fields))
-            .where(term_pred(F.col("term")))
-            .select("field", "term", id_col, "seg")
-        )
-
-    seg_schema = (
-        f"term string, {id_col} long, field string, tf bigint"
-        + (", pos array<int>" if has_pos else "")
-        + ", bucket bigint"
-    )
-    allp = (
-        slice_(base_postings.withColumn("seg", F.lit(BASE_SEG)))
-        .unionByName(
-            slice_(_seg_union(spark, path, segs, "postings", seg_schema))
-        )
-        .localCheckpoint()
-    )
-    cand = allp.select(id_col).distinct()
-    plens = _all_plens(spark, path, segs, id_col)
-    latest = (
-        plens.join(cand, id_col, "left_semi")
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("seg"))
-    )
-    tombs = (
-        _all_tombs(spark, path, segs, id_col)
-        .groupBy(id_col)
-        .agg(F.max("seg").alias("_tseg"))
-    )
-    alive = (
-        latest.join(tombs, id_col, "left")
-        .where(F.col("seg") > F.coalesce(F.col("_tseg"), F.lit(-1)))
-        .select(id_col, "seg")
-    )
+    has_pos = "pos" in spark.read.parquet(f"{path}/postings").columns
+    allp = _with_segments(
+        spark,
+        path,
+        segs,
+        "postings",
+        _postings_schema(id_col, has_pos),
+        ["field", "term", id_col],
+        where=lambda df: df.where(F.col("field").isin(fields)).where(
+            term_pred(F.col("term"))
+        ),
+    ).localCheckpoint()
+    alive = _alive(spark, path, segs, id_col, candidates=allp.select(id_col).distinct())
     return allp.join(alive, [id_col, "seg"]).select("field", "term", id_col)
 
 
 def _read_fieldstats(spark: SparkSession, path: str) -> dict:
-    """Per-field (n_docs, sum_dl) counters — an f-row relation, read
-    DRIVER-SIDE (``read_meta_parquet``: pyarrow over the Hadoop FS, no
-    Spark job; r15 — the write side went driver-side in r14, this is its
-    read twin).  Falls back to the ordinary Spark collect on any
-    surprise."""
-    from azuredatalakeindexer_spark.functions.localrel import read_meta_parquet
+    """Per-field (n_docs, sum_dl) counters, read driver-side."""
+    from azuredatalakeindexer_spark.sources.profile_index import _fieldstats_rows
 
-    rows = read_meta_parquet(spark, f"{path}/fieldstats")
-    if rows is None:
-        rows = [
-            r.asDict()
-            for r in spark.read.parquet(f"{path}/fieldstats").collect()
-        ]
-    return {r["field"]: (int(r["n_docs"]), int(r["sum_dl"])) for r in rows}
+    return {
+        r["field"]: (int(r["n_docs"]), int(r["sum_dl"]))
+        for r in _fieldstats_rows(spark, path)
+    }
 
 
 def _write_fieldstats_exact(
@@ -353,6 +434,7 @@ def upsert_profile_index_segmented(
     from azuredatalakeindexer_spark.sources.profile_index import (
         _dbucket,
         _dedupe_profile_delta,
+        _lens_from_postings,
         _postings_rows,
         _read_meta,
         _stack_fields,
@@ -361,7 +443,6 @@ def upsert_profile_index_segmented(
         StagedCommit,
         recover_for_maintenance,
     )
-    from azuredatalakeindexer_spark.sources.text_index import _lens_from_postings
 
     known = _known or {}
     if not known.get("recovered"):
@@ -432,9 +513,7 @@ def upsert_profile_index_segmented(
     # Layer 2: the new-lens materialization and the predecessor-lookup →
     # statuses chain are independent given layer 1.
     def _chain_lens():
-        return _lens_from_postings(
-            new_postings, pairs, id_col, n_buckets, per_field=True
-        ).localCheckpoint()
+        return _lens_from_postings(new_postings, pairs, id_col, n_buckets).localCheckpoint()
 
     def _chain_statuses():
         # old per-field dl of the batch's LIVE predecessors — statuses and
@@ -648,10 +727,12 @@ def compact_profile_index(
     id_col: str = "doc_id",
 ) -> int:
     """Fold every segment back into the base multi-field layout: resolve
-    live postings/doclens/docvals per doc-level winning segment, rewrite
-    the base relations (content-identical to a fresh
+    live postings/doclens/docvals/docstore per doc-level winning segment,
+    rewrite the base relations (content-identical to a fresh
     ``build_profile_index`` of the logical corpus — test-pinned), refresh
-    fieldstats from the resolved doclens, drop ``segments/``.  Everything
+    fieldstats and the terms rollup from the resolved relations, drop
+    ``segments/``; queries take the segment-free fast paths again.  A
+    fully-tombstoned corpus stages typed 0-row unpartitioned sentinels.  Everything
     stages and promotes under one journal.  Returns the number of
     segments folded."""
     from azuredatalakeindexer_spark.sources.profile_index import _read_meta
@@ -668,30 +749,12 @@ def compact_profile_index(
 
     alive = _alive(spark, path, segs, id_col).localCheckpoint()
 
-    base_postings = spark.read.parquet(f"{path}/postings")
     # positional indexes keep their pos lists through the fold (r13)
-    has_pos = "pos" in base_postings.columns
+    has_pos = "pos" in spark.read.parquet(f"{path}/postings").columns
     pcols = ["term", id_col, "field", "tf"] + (["pos"] if has_pos else [])
-    pschema = (
-        f"term string, {id_col} long, field string, tf bigint"
-        + (", pos array<int>" if has_pos else "")
-        + ", bucket bigint"
+    allp = _with_segments(
+        spark, path, segs, "postings", _postings_schema(id_col, has_pos), pcols
     )
-
-    def pslice(df: DataFrame, seg: int) -> DataFrame:
-        return df.select(*pcols).withColumn("seg", F.lit(seg))
-
-    pparts = [pslice(base_postings, BASE_SEG)]
-    for s in segs:
-        pparts.append(
-            pslice(
-                _read_or_empty(spark, f"{_seg_dir(path, s)}/postings", pschema),
-                s,
-            )
-        )
-    allp = pparts[0]
-    for p in pparts[1:]:
-        allp = allp.unionByName(p)
     from azuredatalakeindexer_spark.functions.text import portable_hash64
 
     merged = (
@@ -703,24 +766,6 @@ def compact_profile_index(
         .localCheckpoint()
     )
 
-    def lslice(df: DataFrame, seg: int) -> DataFrame:
-        return df.select(id_col, "field", "dl").withColumn("seg", F.lit(seg))
-
-    lparts = [lslice(spark.read.parquet(f"{path}/doclens"), BASE_SEG)]
-    for s in segs:
-        lparts.append(
-            lslice(
-                _read_or_empty(
-                    spark,
-                    f"{_seg_dir(path, s)}/doclens",
-                    f"{id_col} long, field string, dl int, dbucket int",
-                ),
-                s,
-            )
-        )
-    alll = lparts[0]
-    for p in lparts[1:]:
-        alll = alll.unionByName(p)
     # per-(id, field) bucket sets from the RESOLVED postings, never from
     # carried columns: an r9-built (pre-bucket-set) index's rows would
     # otherwise land as empty sets and silently break later victim
@@ -729,7 +774,8 @@ def compact_profile_index(
         F.array_sort(F.collect_set("bucket")).alias("buckets")
     )
     lens = (
-        alll.join(alive, [id_col, "seg"])
+        _all_plens(spark, path, segs, id_col)
+        .join(alive, [id_col, "seg"])
         .select(id_col, "field", "dl")
         .join(bsets, [id_col, "field"], "left")
         .withColumn(
@@ -754,7 +800,7 @@ def compact_profile_index(
     # the five staged tier writes below derive from the checkpointed
     # resolved relations (or their own LWW resolution of disjoint
     # relations) — mutually independent, submitted concurrently (r12,
-    # same shape as compact_text_index); per-tier swaps record inside
+    # same shape as the in-place ops); per-tier swaps record inside
     # each thunk, promote stays one sequential rename pass
     def _w_postings() -> None:
         if merged_empty:
@@ -777,51 +823,37 @@ def compact_profile_index(
         commit.swap("doclens", "doclens")
 
     def _w_fieldstats() -> None:
-        # fieldstats from the resolved doclens (exact, same avg division);
-        # the agg collects f rows which land driver-side (r14; see
-        # write_meta_parquet)
-        from azuredatalakeindexer_spark.functions.localrel import (
-            write_meta_parquet,
+        # fieldstats from the resolved doclens (exact, same avg division)
+        from azuredatalakeindexer_spark.sources.profile_index import (
+            _write_fieldstats_from,
         )
 
-        rows = (
-            lens.groupBy("field")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.avg("dl").alias("avgdl"),
-                F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
-            )
-            .collect()
-        )
-        write_meta_parquet(
-            spark,
-            [
-                (r["field"], r["n_docs"], r["avgdl"], int(r["sum_dl"]))
-                for r in sorted(rows, key=lambda r: r["field"])
-            ],
-            "field string, n_docs bigint, avgdl double, sum_dl bigint",
-            commit.stage("fieldstats"),
-        )
+        _write_fieldstats_from(lens, path, target=commit.stage("fieldstats"))
         commit.swap("fieldstats", "fieldstats")
 
-    def _w_docvals() -> None:
-        def vslice(df: DataFrame, seg: int) -> DataFrame:
-            return df.select(id_col, *idx_attrs).withColumn("seg", F.lit(seg))
+    def _w_terms() -> None:
+        # refresh the vocabulary rollup from the resolved live postings
+        # (already checkpointed): after compaction it is exact again and
+        # vocabulary serves read only it
+        from azuredatalakeindexer_spark.sources.profile_index import (
+            _term_counts,
+            _write_terms_rollup,
+        )
 
-        base_vals = spark.read.parquet(f"{path}/docvals")
-        vparts = [vslice(base_vals, BASE_SEG)]
-        for s in segs:
-            vparts.append(
-                vslice(
-                    _read_or_empty_like(
-                        spark, f"{_seg_dir(path, s)}/docvals", base_vals
-                    ),
-                    s,
-                )
-            )
-        allv = vparts[0]
-        for p in vparts[1:]:
-            allv = allv.unionByName(p)
+        _write_terms_rollup(
+            _term_counts(merged).withColumnRenamed("n", "df"), commit.stage("terms")
+        )
+        commit.swap("terms", "terms")
+
+    def _w_docvals() -> None:
+        allv = _with_segments(
+            spark,
+            path,
+            segs,
+            "docvals",
+            spark.read.parquet(f"{path}/docvals").schema,
+            [id_col, *idx_attrs],
+        )
         vals = (
             allv.join(alive, [id_col, "seg"])
             .select(id_col, *idx_attrs)
@@ -850,26 +882,14 @@ def compact_profile_index(
         # into the base store — the live text of every ALIVE (doc, field)
         # is its max-segment docstore row (deleted docs drop out via the
         # alive join)
-        def sslice(df: DataFrame, seg: int) -> DataFrame:
-            return df.select(id_col, "field", "text").withColumn(
-                "seg", F.lit(seg)
-            )
-
-        sparts = [sslice(spark.read.parquet(f"{path}/docstore"), BASE_SEG)]
-        for s in segs:
-            sparts.append(
-                sslice(
-                    _read_or_empty(
-                        spark,
-                        f"{_seg_dir(path, s)}/docstore",
-                        f"{id_col} long, field string, text string, dbucket int",
-                    ),
-                    s,
-                )
-            )
-        alls = sparts[0]
-        for p in sparts[1:]:
-            alls = alls.unionByName(p)
+        alls = _with_segments(
+            spark,
+            path,
+            segs,
+            "docstore",
+            f"{id_col} long, field string, text string, dbucket int",
+            [id_col, "field", "text"],
+        )
         live_store = (
             alls.join(alive, [id_col, "seg"])
             .select(id_col, "field", "text")
@@ -891,6 +911,7 @@ def compact_profile_index(
         _w_postings,
         _w_doclens,
         _w_fieldstats,
+        _w_terms,
         _w_docvals if idx_attrs else None,
         _w_docstore if hadoop_path_exists(spark, f"{path}/docstore") else None,
     )
@@ -923,9 +944,52 @@ def run_stream_profile_index(
     last-writer-wins makes the drain batch-split-invariant: 1 or N
     micro-batches serve bit-identical profiles (test-pinned; the oracle
     is the scan-time profile replay)."""
-    from azuredatalakeindexer_spark.sources.ann_index import hadoop_path_exists
+    _run_stream(
+        spark,
+        docs_dir,
+        schema,
+        index_dir,
+        checkpoint_dir,
+        field_cols=field_cols,
+        attr_cols=attr_cols,
+        id_col=id_col,
+        n_buckets=n_buckets,
+        max_files_per_trigger=max_files_per_trigger,
+        segmented=True,
+        compact_every=compact_every,
+        positions=False,
+        store_fields=False,
+    )
+
+
+def _run_stream(
+    spark: SparkSession,
+    docs_dir: str,
+    schema,
+    index_dir: str,
+    checkpoint_dir: str,
+    *,
+    field_cols,
+    attr_cols,
+    id_col: str,
+    n_buckets: int,
+    max_files_per_trigger: int,
+    segmented: bool,
+    compact_every: int | None,
+    positions: bool,
+    store_fields: bool,
+) -> None:
+    """The one streaming drain behind ``run_stream_profile_index`` and
+    ``text_index.run_stream_text_index``: ``availableNow`` over the
+    document directory; the first micro-batch builds the index (``meta``
+    is written last, so its existence is the build-vs-upsert marker),
+    every later batch is a MergeOrUpload delta — an O(batch) LSM segment
+    (``segmented``, folded by ``compact_every``) or an in-place
+    affected-bucket upsert.  Upserts are last-writer-wins per document,
+    so 1 or N micro-batches yield the same served results."""
     from azuredatalakeindexer_spark.sources.profile_index import (
         build_profile_index,
+        upsert_profile_index,
     )
 
     stream = (
@@ -937,13 +1001,16 @@ def run_stream_profile_index(
     # Per-batch fixed work hoisted OUT of the landing (r15, VERDICT r14
     # next-#1): the drain owns the directory for its whole run (single-
     # writer lease; each promote completes in-process before the next
-    # batch), so layout facts are resolved once — by the build — and
-    # carried across batches instead of re-probed inside every ``handle``.
-    # ``known`` stays None for a resumed drain against a pre-existing
-    # index (full per-batch probes, exactly the old behavior).
+    # batch), so the segmented path's layout facts are resolved once — by
+    # the build — and carried across batches instead of re-probed inside
+    # every ``handle``.  ``known`` stays None for a resumed drain against
+    # a pre-existing index (full per-batch probes).
     state: dict = {"built": False, "known": None}
 
     def handle(batch: DataFrame, _batch_id: int) -> None:
+        # Hadoop FS probe, not os.path — the index may live on abfss/s3/hdfs
+        # where a local-path check is always False and every micro-batch
+        # would take the build path, keeping only the last batch
         if not state["built"] and not hadoop_path_exists(
             batch.sparkSession, f"{index_dir}/meta"
         ):
@@ -954,18 +1021,23 @@ def run_stream_profile_index(
                 attr_cols=attr_cols,
                 id_col=id_col,
                 n_buckets=n_buckets,
+                store_fields=store_fields,
+                positions=positions,
             )
             state["built"] = True
             # this drain just built the layout with these exact arguments
             state["known"] = {
                 "recovered": True,
                 "meta": (n_buckets, list(field_cols), list(attr_cols)),
-                "has_pos": False,
-                "has_store": False,
+                "has_pos": positions,
+                "has_store": store_fields,
                 "segments": [],
             }
             return
         state["built"] = True
+        if not segmented:
+            upsert_profile_index(batch.sparkSession, index_dir, batch, id_col=id_col)
+            return
         known = state["known"]
         upsert_profile_index_segmented(
             batch.sparkSession, index_dir, batch, id_col=id_col, _known=known

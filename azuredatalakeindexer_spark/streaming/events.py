@@ -52,6 +52,11 @@ def _merge_batch(spark: SparkSession, rows: DataFrame, target_dir: str) -> None:
     Batch-split invariant: an incoming row replaces an existing row for the
     same key only if (fileLastModified, _seq) is strictly newer — so merging
     {e1} then {e2} equals merging {e1, e2}.
+
+    The target may have been seeded WITHOUT ``_seq`` (a listing-built path
+    index: ``listing_to_path_rows``, ``document_lake_path_index``): its rows
+    union in with a null ``_seq``, and the descending tie-break sorts nulls
+    last, so an event row wins a ``fileLastModified`` tie against them.
     """
     rows = dedup_last_writer(rows, ["key"], "fileLastModified", tiebreak_col="_seq")
     if os.path.isdir(target_dir) and any(
@@ -59,7 +64,10 @@ def _merge_batch(spark: SparkSession, rows: DataFrame, target_dir: str) -> None:
     ):
         existing = spark.read.parquet(target_dir)
         merged = dedup_last_writer(
-            existing.unionByName(rows), ["key"], "fileLastModified", tiebreak_col="_seq"
+            existing.unionByName(rows, allowMissingColumns=True),
+            ["key"],
+            "fileLastModified",
+            tiebreak_col="_seq",
         )
     else:
         merged = rows

@@ -626,7 +626,7 @@ def index_lifecycle_metrics(spark, sf_dir: str) -> dict[str, float]:
         # segmented (LSM) maintenance: the scale path for text — the
         # in-place rows above rewrite every bucket a batch's terms touch
         # (~all of them for Zipf text), the segment rows write O(batch)
-        from azuredatalakeindexer_spark.sources.text_segments import (
+        from azuredatalakeindexer_spark.sources.text_index import (
             compact_text_index,
             delete_from_text_index_segmented,
             upsert_text_index_segmented,
@@ -733,7 +733,7 @@ def sustained_lsm_metrics(
         build_text_index,
         query_text_index,
     )
-    from azuredatalakeindexer_spark.sources.text_segments import (
+    from azuredatalakeindexer_spark.sources.text_index import (
         compact_text_index,
         list_segments,
         upsert_text_index_segmented,

@@ -171,8 +171,8 @@ def test_text_index_prunes_unqueried_buckets(spark, tmp_path):
     import os
     import re
 
+    from azuredatalakeindexer_spark.sources.profile_index import _py_bucket
     from azuredatalakeindexer_spark.sources.text_index import (
-        _py_bucket,
         build_text_index,
         query_text_index,
     )
@@ -326,8 +326,8 @@ def test_upsert_text_index_clears_emptied_victim_bucket(spark, tmp_path):
     """ADVICE r5 (high): replacing a doc whose old term was the ONLY posting
     in its bucket must clear that bucket — otherwise the stale posting
     persists and the old term still matches."""
+    from azuredatalakeindexer_spark.sources.profile_index import _py_bucket
     from azuredatalakeindexer_spark.sources.text_index import (
-        _py_bucket,
         build_text_index,
         query_text_index,
         upsert_text_index,
@@ -369,8 +369,8 @@ def test_delete_all_docs_empties_index_and_counts_zero_token_docs(spark, tmp_pat
     build_text_index(docs, path, n_buckets=16)
     ids = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
     assert delete_from_text_index(spark, path, ids, n_buckets=16) == 3
-    st = spark.read.parquet(f"{path}/stats").first()
-    assert st["n_docs"] == 0
+    # an emptied one-field index has no fieldstats row (n_docs = 0)
+    assert spark.read.parquet(f"{path}/fieldstats").count() == 0
     assert spark.read.parquet(f"{path}/postings").count() == 0
     assert spark.read.parquet(f"{path}/doclens").count() == 0
     assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 0
@@ -384,8 +384,8 @@ def test_delete_all_docs_empties_index_and_counts_zero_token_docs(spark, tmp_pat
 def test_delete_partial_keeps_other_buckets_intact(spark, tmp_path):
     """Deleting the sole occupant of one bucket clears ONLY that bucket;
     other buckets' postings survive untouched."""
+    from azuredatalakeindexer_spark.sources.profile_index import _py_bucket
     from azuredatalakeindexer_spark.sources.text_index import (
-        _py_bucket,
         build_text_index,
         delete_from_text_index,
         query_text_index,
@@ -430,7 +430,7 @@ def test_delete_last_token_docs_leaves_readable_postings(spark, tmp_path):
     # postings fully emptied but still readable; doclens keeps the 2 docs
     assert spark.read.parquet(f"{path}/postings").count() == 0
     assert spark.read.parquet(f"{path}/doclens").count() == 2
-    assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == 2
+    assert spark.read.parquet(f"{path}/fieldstats").first()["n_docs"] == 2
     assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 0
     # upsert into the sentinel-postings state: doclens must KEEP the two
     # surviving zero-token docs (the doclens rewrite is gated on the doclens
@@ -442,7 +442,7 @@ def test_delete_last_token_docs_leaves_readable_postings(spark, tmp_path):
     lens = {r["doc_id"]: r["dl"] for r in
             spark.read.parquet(f"{path}/doclens").collect()}
     assert lens == {3: 0, 4: 0, 5: 2}
-    assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == 3
+    assert spark.read.parquet(f"{path}/fieldstats").first()["n_docs"] == 3
     assert query_text_index(spark, path, ["beta"], k=5, n_buckets=16).count() == 1
 
 
@@ -971,7 +971,7 @@ def test_text_index_filtered_query_keeps_global_stats(spark, tmp_path):
         build_text_index,
         query_text_index,
     )
-    from azuredatalakeindexer_spark.sources.text_segments import (
+    from azuredatalakeindexer_spark.sources.text_index import (
         upsert_text_index_segmented,
     )
 

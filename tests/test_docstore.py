@@ -110,7 +110,7 @@ def test_docstore_rides_the_segmented_lsm_path(spark, tmp_path):
     version by the max-segment rule, and compaction folds everything back
     into the base store — at every step highlight_from_index equals the
     scan-time replay over the logical corpus."""
-    from azuredatalakeindexer_spark.sources.text_segments import (
+    from azuredatalakeindexer_spark.sources.text_index import (
         compact_text_index,
         delete_from_text_index_segmented,
         upsert_text_index_segmented,

@@ -11,7 +11,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from azuredatalakeindexer_spark.sources.text_index import _sqld, _sqlstr
+from azuredatalakeindexer_spark.sources.profile_index import _sqld, _sqlstr
 
 TRICKY_STRINGS = [
     "plain",

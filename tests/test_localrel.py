@@ -89,37 +89,75 @@ def test_read_meta_parquet_roundtrip(spark, tmp_path):
     assert read_meta_parquet(spark, r) is None
 
 
+def test_read_meta_parquet_corrupt_file_falls_back_and_logs(
+    spark, tmp_path, caplog, monkeypatch
+):
+    """A corrupt data file is a decode failure: ``None`` (the caller's
+    Spark fallback) plus a debug record naming the exception class.  A
+    failure outside the FS/decode contract is NOT swallowed."""
+    import logging
+
+    import pytest as _pytest
+
+    import azuredatalakeindexer_spark.sources.staging as staging
+    from azuredatalakeindexer_spark.functions.localrel import read_meta_parquet
+
+    bad = tmp_path / "corrupt"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file at all")
+    with caplog.at_level(logging.DEBUG, logger="azuredatalakeindexer_spark.functions.localrel"):
+        assert read_meta_parquet(spark, str(bad)) is None
+    rec = [r for r in caplog.records if "falling back" in r.getMessage()]
+    assert rec and "ArrowInvalid" in rec[0].getMessage(), caplog.text
+
+    def boom(*_a, **_k):
+        raise TypeError("a bug, not an I/O failure")
+
+    monkeypatch.setattr(staging, "_read_file", boom)
+    with _pytest.raises(TypeError):
+        read_meta_parquet(spark, str(bad))
+
+
 def test_check_n_buckets_uses_driver_side_read(spark, tmp_path):
-    """the stats n_buckets guard must not spend a Spark job (r15): pin
-    behavior on a real stats relation — match passes, mismatch raises,
-    pre-pin layouts (no n_buckets column) are accepted."""
+    """the n_buckets guard must not spend a Spark job (r15): pin behavior
+    on real layout metadata read driver-side — the ``meta.json`` sidecar
+    and, for indexes built before it, the parquet ``meta`` relation
+    (read through ``read_meta_parquet``) — match passes, mismatch
+    raises; the guard returns the index's one searchable field."""
+    import json
+
     from azuredatalakeindexer_spark.functions.localrel import write_meta_parquet
+    from azuredatalakeindexer_spark.sources.staging import _write_file_atomic
     from azuredatalakeindexer_spark.sources.text_index import _check_n_buckets
 
     import pytest as _pytest
 
     p = str(tmp_path / "idx")
-    write_meta_parquet(
+    _write_file_atomic(
         spark,
-        [(10, 2.0, 20, 8)],
-        "n_docs bigint, avgdl double, sum_dl bigint, n_buckets int",
-        f"{p}/stats",
+        f"{p}/meta.json",
+        json.dumps({"n_buckets": 8, "fields": ["text"], "attrs": []}),
     )
-    _check_n_buckets(spark, p, 8, "t")  # match: no raise
+    assert _check_n_buckets(spark, p, 8, "t") == "text"  # match: no raise
     with _pytest.raises(ValueError, match="n_buckets=8"):
         _check_n_buckets(spark, p, 16, "t")
     legacy = str(tmp_path / "legacy")
     write_meta_parquet(
-        spark, [(10, 2.0)], "n_docs bigint, avgdl double", f"{legacy}/stats"
+        spark,
+        [(8, "body", "")],
+        "n_buckets int, fields string, attrs string",
+        f"{legacy}/meta",
     )
-    _check_n_buckets(spark, legacy, 999, "t")  # pre-pin: accepted
+    assert _check_n_buckets(spark, legacy, 8, "t") == "body"
+    with _pytest.raises(ValueError, match="n_buckets=8"):
+        _check_n_buckets(spark, legacy, 999, "t")
 
 
 def test_seg_union_prune_edges(spark, tmp_path):
     """prune on a column that is NOT in the schema falls back to a full
     read; prune values matching no partition dir yield an empty frame with
     the right columns; missing relations are skipped silently."""
-    from azuredatalakeindexer_spark.sources.text_segments import _seg_union
+    from azuredatalakeindexer_spark.sources.profile_segments import _seg_union
 
     root = str(tmp_path / "ti")
     df = spark.range(10).select(

@@ -86,7 +86,7 @@ def test_profile_index_prunes_buckets(spark, tmp_path):
     build_profile_index(docs, path, field_cols=["text", "source"], n_buckets=16)
     out = query_profile_index(spark, path, {"text": (["merge"], 1.0)}, k=5)
     assert out.count() > 0
-    from azuredatalakeindexer_spark.sources.text_index import _py_bucket
+    from azuredatalakeindexer_spark.sources.profile_index import _py_bucket
 
     # inputFiles() ignores pruning — assert the scan's PartitionFilters
     # pin the single bucket AND the term IN-list is pushed
@@ -1349,6 +1349,7 @@ def test_profile_suggest_pushes_prefix_into_postings_scan(spark, tmp_path):
         .executedPlan()
         .toString()
     )
-    # the prefix predicate must reach the postings FileScan, not run
-    # post-scan only: vocabulary-slice cost depends on it
+    # the prefix predicate must reach the vocabulary FileScan (the terms
+    # rollup for this single-field scope), not run post-scan only:
+    # vocabulary-slice cost depends on it
     assert "StartsWith(term,mer)" in plan

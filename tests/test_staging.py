@@ -24,7 +24,7 @@ from azuredatalakeindexer_spark.sources.text_index import (
     suggest_from_index,
     upsert_text_index,
 )
-from azuredatalakeindexer_spark.sources.text_segments import (
+from azuredatalakeindexer_spark.sources.text_index import (
     compact_text_index,
     list_segments,
     upsert_text_index_segmented,
@@ -201,8 +201,9 @@ def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
     promotion journal (0 = crash right after the journal is durable,
     n = crash just before cleanup), executing k swaps, 'crashing', and
     recovering must land on exactly the post-op state — never a mix.
-    Uses a small in-place upsert (postings partition swaps + doclens +
-    stats + terms whole-dir swaps — every swap kind)."""
+    Uses a small in-place upsert (postings partition swaps + doclens
+    partition swaps + fieldstats + terms whole-dir swaps — every swap
+    kind)."""
     docs = spark.createDataFrame(
         [(i, f"alpha w{i % 3} beta") for i in range(12)], "doc_id long, text string"
     )
@@ -229,7 +230,7 @@ def test_crash_at_every_swap_index_rolls_forward_exactly(spark, tmp_path):
     with patch.object(staging, "_execute_plan", side_effect=count_exec):
         upsert_text_index(spark, probe, delta, n_buckets=8)
     n_swaps = lens[0]
-    assert n_swaps >= 4  # partitions + doclens + stats + terms at minimum
+    assert n_swaps >= 4  # partitions + doclens + fieldstats + terms at minimum
     assert _snapshot_b8(spark, probe) == expected
 
     for k in range(n_swaps + 1):
@@ -252,7 +253,7 @@ def _snapshot_b8(spark, path):
     q = [tuple(r) for r in
          query_text_index(spark, path, ["alpha", "gamma"], k=20, n_buckets=8).collect()]
     s = [tuple(r) for r in suggest_from_index(spark, path, "w", k=10).collect()]
-    st = spark.read.parquet(f"{path}/stats").first()
+    st = spark.read.parquet(f"{path}/fieldstats").first()  # the one field
     return q, s, (st["n_docs"], st["sum_dl"])
 
 

@@ -1,4 +1,5 @@
-"""Segmented (LSM-style) text-index maintenance (sources/text_segments.py):
+"""Segmented (LSM-style) text-index maintenance (the profile core's LSM tier,
+sources/profile_segments.py, behind the text_index wrappers):
 O(batch) upserts/deletes as immutable segments, last-writer-wins query
 resolution, compaction equivalence, stats exactness."""
 
@@ -14,7 +15,7 @@ from azuredatalakeindexer_spark.sources.text_index import (
     query_text_index,
     upsert_text_index,
 )
-from azuredatalakeindexer_spark.sources.text_segments import (
+from azuredatalakeindexer_spark.sources.text_index import (
     compact_text_index,
     delete_from_text_index_segmented,
     list_segments,
@@ -37,6 +38,14 @@ def _rows(df):
 
 def _docs(spark):
     return load_table(spark, SF, "documents").select("doc_id", "text")
+
+
+def _stats(spark, path):
+    """The one field's corpus-statistics row (the index is a one-field
+    profile index: per-field ``fieldstats`` replace the old 1-row
+    ``stats``; an emptied index has no row)."""
+    rows = spark.read.parquet(f"{path}/fieldstats").collect()
+    return rows[0].asDict() if rows else {"n_docs": 0, "avgdl": None, "sum_dl": 0}
 
 
 def test_segmented_upsert_matches_scan_and_inplace(spark, tmp_path):
@@ -93,7 +102,7 @@ def test_segmented_delete_readd_and_idempotence(spark, tmp_path):
     alive = query_text_index(spark, path, ["beta"], k=10, n_buckets=16)
     assert {r["doc_id"] for r in alive.collect()} == {1, 2, 3}
     # stats track the revival exactly
-    s = spark.read.parquet(f"{path}/stats").first()
+    s = _stats(spark, path)
     assert s["n_docs"] == 3 and abs(s["avgdl"] - (2 + 2 + 3) / 3) < 1e-12
 
 
@@ -143,7 +152,7 @@ def test_multi_segment_lww_and_compaction_equivalence(spark, tmp_path):
         # doclens carries the buckets ARRAY column (the victim directory)
         return tuple(tuple(v) if isinstance(v, list) else v for v in r)
 
-    for rel in ("postings", "doclens", "stats"):
+    for rel in ("postings", "doclens", "fieldstats", "terms"):
         a = {_canon(r) for r in spark.read.parquet(f"{path}/{rel}").collect()}
         b = {_canon(r) for r in spark.read.parquet(f"{fresh}/{rel}").collect()}
         assert a == b, rel
@@ -166,7 +175,7 @@ def test_segmented_stats_match_rebuild_after_each_op(spark, tmp_path):
     from azuredatalakeindexer_spark.functions.text import tokens as _tok
 
     def check(logical):
-        s = spark.read.parquet(f"{path}/stats").first()
+        s = _stats(spark, path)
         exp = (
             logical.select(F.size(_tok(F.col("text"))).alias("dl"))
             .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a"))
@@ -217,14 +226,17 @@ def test_segmented_query_prunes_buckets_in_every_segment(spark, tmp_path):
     """The segmented query must carry the query terms' bucket IN-list as a
     STATIC PartitionFilter on the BASE postings scan and on EVERY
     segment's postings scan — the LSM read tax is |segments| PRUNED scans,
-    never |segments| full scans.  Asserted on the real live_query_slice
-    plan (materialize=False exposes the scans the checkpoint would hide)."""
+    never |segments| full scans.  Asserted on the real live_profile_slices
+    plan (localCheckpoint stubbed to identity exposes the scans the
+    checkpoint would hide)."""
     import re
 
     import pyspark.sql.functions as F
 
-    from azuredatalakeindexer_spark.sources.text_index import _py_bucket
-    from azuredatalakeindexer_spark.sources.text_segments import live_query_slice
+    from azuredatalakeindexer_spark.sources.profile_index import _py_bucket
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        live_profile_slices,
+    )
 
     docs = _docs(spark)
     path = str(tmp_path / "ti")
@@ -236,11 +248,18 @@ def test_segmented_query_prunes_buckets_in_every_segment(spark, tmp_path):
         spark, path, docs.where((F.col("doc_id") >= 10) & (F.col("doc_id") < 20)),
         n_buckets=16,
     )
-    postings, _ = live_query_slice(
-        spark, path, [1, 2],
-        buckets=[_py_bucket("merge", 16)], terms=["merge"],
-        materialize=False,
-    )
+    cls = type(docs)  # the concrete (classic) DataFrame class
+    orig = cls.localCheckpoint
+    cls.localCheckpoint = lambda self, eager=True: self
+    try:
+        postings, _dls, _vals = live_profile_slices(
+            spark, path, [1, 2], id_col="doc_id",
+            buckets=[_py_bucket("merge", 16)], all_terms=["merge"],
+            cond=(F.col("field") == "text") & F.col("term").isin(["merge"]),
+            need_attrs=[], fields=["text"],
+        )
+    finally:
+        cls.localCheckpoint = orig
     plan = postings._jdf.queryExecution().executedPlan().toString()
     # The BASE postings scan prunes via a static PartitionFilter (normal
     # partitioned read); the SEGMENT scans prune at path-selection time
@@ -441,7 +460,7 @@ def test_randomized_lsm_op_sequence_matches_model(spark, tmp_path):
         ).where(F.col("doc_id").isNotNull())
         got = _rows(query_text_index(spark, path, TERMS, k=25, n_buckets=16))
         assert got == _rows(bm25_topk(logical, TERMS, k=25))
-        assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == len(model)
+        assert _stats(spark, path)["n_docs"] == len(model)
 
     for step in range(6):
         if rng.random() < 0.6:
@@ -531,13 +550,14 @@ def test_duplicate_ids_in_one_delta_resolve_deterministically(spark, tmp_path):
         assert got == {2: 200, 3: 201}
         lens = spark.read.parquet(f"{path}/doclens")
         if mode == "segmented":
-            from azuredatalakeindexer_spark.sources.text_segments import alive_docs
-            lens = alive_docs(spark, path, list_segments(spark, path))
+            from azuredatalakeindexer_spark.sources.profile_segments import _alive
+
+            lens = _alive(spark, path, list_segments(spark, path), "doc_id")
         assert lens.where(F.col("doc_id") == 2).count() == 1
         assert _rows(
             query_text_index(spark, path, ["beta", "zeta"], k=10, n_buckets=16)
         ) == _rows(bm25_topk(resolved, ["beta", "zeta"], k=10))
-        stats = spark.read.parquet(f"{path}/stats").first()
+        stats = _stats(spark, path)
         assert (stats["n_docs"], stats["sum_dl"]) == (3, 2 + 3 + 2)
 
 
@@ -550,7 +570,7 @@ def test_noop_segmented_delete_writes_no_segment(spark, tmp_path):
     path = str(tmp_path / "ti")
     build_text_index(docs, path, n_buckets=16)
     absent = spark.createDataFrame([(99,), (100,)], "doc_id long")
-    before = spark.read.parquet(f"{path}/stats").first()
+    before = _stats(spark, path)
     assert delete_from_text_index_segmented(spark, path, absent) == 0
     assert list_segments(spark, path) == []  # no segment written
     live = spark.createDataFrame([(2,), (99,)], "doc_id long")
@@ -559,7 +579,7 @@ def test_noop_segmented_delete_writes_no_segment(spark, tmp_path):
     # redelivery of the same delete: no-op again, still one segment
     assert delete_from_text_index_segmented(spark, path, live) == 0
     assert list_segments(spark, path) == [1]
-    after = spark.read.parquet(f"{path}/stats").first()
+    after = _stats(spark, path)
     assert before["n_docs"] - 1 == after["n_docs"]
 
 
@@ -578,7 +598,7 @@ def test_compact_after_delete_all_leaves_readable_sentinel(spark, tmp_path):
     # all three relations re-readable, empty
     assert spark.read.parquet(f"{path}/postings").count() == 0
     assert spark.read.parquet(f"{path}/doclens").count() == 0
-    assert spark.read.parquet(f"{path}/stats").first()["n_docs"] == 0
+    assert _stats(spark, path)["n_docs"] == 0
     # and the index comes back to life through the normal upsert path
     upsert_text_index(spark, path, docs, n_buckets=16)
     got = _rows(query_text_index(spark, path, ["beta"], k=10, n_buckets=16))
@@ -651,11 +671,15 @@ def _recount_terms(spark, path):
     """Ground truth: (term, df) recounted from the LIVE postings."""
     import pyspark.sql.functions as F
 
-    from azuredatalakeindexer_spark.sources.text_segments import live_postings
+    from azuredatalakeindexer_spark.sources.profile_segments import (
+        live_field_term_slice,
+    )
 
     segs = list_segments(spark, path)
     if segs:
-        p = live_postings(spark, path, segs)
+        p = live_field_term_slice(
+            spark, path, segs, lambda t: F.lit(True), fields=["text"]
+        )
     else:
         p = spark.read.parquet(f"{path}/postings")
     return {
@@ -677,7 +701,7 @@ def test_terms_rollup_exact_through_mixed_lifecycle(spark, tmp_path):
     def rollup():
         return {
             (r["term"], r["df"])
-            for r in spark.read.parquet(f"{path}/terms").collect()
+            for r in spark.read.parquet(f"{path}/terms").select("term", "df").collect()
         }
 
     build_text_index(docs, path, n_buckets=16)
@@ -746,7 +770,8 @@ def test_suggest_pre_rollup_index_falls_back_and_upgrades(spark, tmp_path):
     logical = docs.join(delta.select("doc_id"), "doc_id", "left_anti").unionByName(delta)
     assert spark.read.parquet(f"{path}/terms").count() > 0  # upgraded
     assert {
-        (r["term"], r["df"]) for r in spark.read.parquet(f"{path}/terms").collect()
+        (r["term"], r["df"])
+        for r in spark.read.parquet(f"{path}/terms").select("term", "df").collect()
     } == _recount_terms(spark, path)
     assert rows(suggest_from_index(spark, path, "s", k=8)) == rows(
         suggest_terms(logical, "s", k=8)

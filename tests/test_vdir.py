@@ -111,7 +111,7 @@ def test_victim_lookup_is_statically_pruned(spark, tmp_path):
     """Two static prunings: the bucket-set lookup reads only the batch
     ids' doclens dbucket partitions, and the postings victim scan reads
     only the buckets the lookup reported — PartitionFilters on both."""
-    from azuredatalakeindexer_spark.sources.text_index import _victim_buckets
+    from azuredatalakeindexer_spark.sources.profile_index import _victim_buckets
 
     docs = _docs(spark)
     path = str(tmp_path / "ti")
@@ -147,7 +147,7 @@ def test_legacy_index_falls_back_and_compact_upgrades(spark, tmp_path):
     """An index whose doclens predates the buckets column maintains via
     the full-projection fallback with identical results — and compaction
     REBUILDS the doclens with the column, upgrading legacy indexes."""
-    from azuredatalakeindexer_spark.sources.text_segments import (
+    from azuredatalakeindexer_spark.sources.text_index import (
         compact_text_index,
         upsert_text_index_segmented,
     )
@@ -156,7 +156,7 @@ def test_legacy_index_falls_back_and_compact_upgrades(spark, tmp_path):
     modern, legacy = str(tmp_path / "m"), str(tmp_path / "l")
     for p in (modern, legacy):
         build_text_index(docs, p, n_buckets=16)
-    _strip_buckets(spark, legacy, ["doc_id", "dl", "dbucket"])
+    _strip_buckets(spark, legacy, ["doc_id", "field", "dl", "dbucket"])
     assert "buckets" not in spark.read.parquet(f"{legacy}/doclens").columns
 
     delta = docs.where(F.col("doc_id") % 4 == 0).select(

@@ -10,7 +10,7 @@ Segmented mode ends with one compaction + a post-compact query.
 The r10 run measured a ~0.9 s/segment query slope (5.5 -> 12.3 s over 8
 segments) — the per-segment plan/listing fixed cost of assembling one
 DataFrame per segment.  r11 consolidates every segment read into one
-path-pruned multi-path scan (text_segments._seg_union), so this tool is
+path-pruned multi-path scan (profile_segments._seg_union), so this tool is
 the done-bar evidence for VERDICT r10 next-#3 (slope <= ~0.3 s/segment).
 
 Usage: python tools/bench_profile_lsm.py [sf_dir] [n_batches]

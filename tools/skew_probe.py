@@ -89,8 +89,8 @@ def main() -> None:
     spark = get_spark("skew_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
+    from azuredatalakeindexer_spark.sources.profile_index import _py_bucket
     from azuredatalakeindexer_spark.sources.text_index import (
-        _py_bucket,
         build_text_index,
         query_text_index,
     )
